@@ -16,6 +16,7 @@ Determinism notes for the value-hash compare:
 from __future__ import annotations
 
 import os
+import re
 import sys
 import tempfile
 from collections.abc import Callable
@@ -102,6 +103,16 @@ def entry(spark: SparkSession) -> DataFrame:
 
 # ------------------------------------------------------- oracle-checked set
 
+_SIZE_UNITS = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30}
+
+
+def _parse_bytes(conf: str, default: int = 128 << 20) -> int:
+    """A Spark byte-size conf ("134217728", "128m", "128MB", "1g",
+    "134217728b") in bytes; ``default`` when it does not parse."""
+    m = re.fullmatch(r"(\d+)\s*([kmg]?)b?", conf.strip().lower())
+    return int(m[1]) * _SIZE_UNITS[m[2]] if m else default
+
+
 def q1_pricing_summary(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     # r8: the sf parquet files are single-row-group, so the scan is ONE
@@ -114,8 +125,8 @@ def q1_pricing_summary(spark, sf_dir):
     # added. The aggregation is exact decimal (order-independent), so
     # the result is bit-identical either way.
     cores = spark.sparkContext.defaultParallelism
-    max_split = int(spark.conf.get("spark.sql.files.maxPartitionBytes",
-                                   str(128 << 20)).rstrip("b"))
+    max_split = _parse_bytes(
+        spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
     n_splits = sum(
         -(-os.path.getsize(p.removeprefix("file:")) // max_split)
         for p in li.inputFiles())

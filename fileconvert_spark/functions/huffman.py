@@ -58,7 +58,8 @@ def code_lengths(counts: np.ndarray, max_len: int = MAX_LEN) -> np.ndarray:
     Two-queue construction over the count-sorted alphabet, then the BITS
     adjustment of ITU-T T.81 K.3: repeatedly take a pair from the longest
     over-limit length, move one code up and rebalance, which preserves the
-    Kraft equality while capping depth.
+    Kraft equality while capping depth. Raises ValueError when more than
+    2**max_len symbols are present: no prefix code that short exists.
 
     Hot path is a compiled C kernel (native/kernels.c
     ``huff_code_lengths``, r8 — the two-queue merge is a data-dependent
@@ -88,6 +89,9 @@ def _code_lengths_py(counts: np.ndarray,
     if m == 1:
         lens[present[0]] = 1
         return lens
+    if m > (1 << max_len):
+        raise ValueError(f"huffman: {m} symbols cannot have codes of at "
+                         f"most {max_len} bits")
     # two-queue merge: leaves sorted ascending; merged nodes are produced
     # in nondecreasing weight order so a FIFO queue keeps them sorted.
     order = present[np.argsort(counts[present], kind="stable")]

@@ -20,6 +20,12 @@ or carrying group/other write bits. Everything degrades gracefully:
 The C source is read through ``__file__`` when the package runs from a
 directory and through zipimport when executors import it from the shipped
 ``--py-files`` zip (session._package_zip archives non-.py files too).
+
+Every kernel's argument types are declared once, in ``_SIGNATURES``:
+arrays as C-contiguous ``np.ctypeslib.ndpointer`` of one dtype, so the
+wrappers pass NumPy arrays straight through and a wrong-dtype or strided
+array raises ``ctypes.ArgumentError`` at the boundary instead of handing
+C the wrong memory.
 """
 
 from __future__ import annotations
@@ -31,8 +37,89 @@ import subprocess
 import sys
 import tempfile
 
+import numpy as np
+
 _LIB = None          # cached ctypes.CDLL (or False = tried and failed)
 _SRC_NAME = "kernels.c"
+
+
+def _array(dtype):
+    return np.ctypeslib.ndpointer(dtype, flags="C_CONTIGUOUS")
+
+
+# lower-case dtype names are C-contiguous array arguments; _int/_uint
+# are scalars; _nullable is an optional raw pointer (None = NULL)
+_u8, _u16, _u32, _u64, _i32, _i64 = map(
+    _array, (np.uint8, np.uint16, np.uint32, np.uint64, np.int32, np.int64))
+_int, _uint, _nullable = ctypes.c_int64, ctypes.c_uint64, ctypes.c_void_p
+
+# argument types of every exported kernel in kernels.c, each of which
+# returns int64_t; load() applies them, tests/test_native.py checks the
+# names and arities against the C source
+_SIGNATURES = {
+    "fsst_encode": (
+        _u8, _int,                  # buf (n+8 readable), n
+        _i64, _int,                 # str_lens, n_str
+        _u16, _u16,                 # lut12, ones
+        _nullable, _nullable,       # sym_t u64, lc_t u16
+        _int, _int,                 # hash_bits, walk_seg
+        _u8, _i64),                 # out (2n), enc_lens
+    "png_defilter": (
+        _u8, _u8,                   # data, filters
+        _int, _int, _int,           # h, w, ch
+        _u8),                       # out
+    "slab_word_hashes": (
+        _u8, _int,                  # buf, n
+        _i64, _int,                 # doc_starts, nd
+        _u64, _i64),                # out_wh, out_wc
+    "slab_gram_hashes": (
+        _u64, _i64,                 # wh, wc
+        _int, _int, _int,           # nd, ngram, short_doc_gram
+        _u64),                      # out_gh
+    "jpeg_entropy_decode": (
+        _u8, _int,                  # data, n
+        _int, _i64, _int,           # n_mcus, sched, sched_n
+        _int,                       # n_comp
+        _i64, _i64,                 # minc, maxc
+        _i64, _u8,                  # vptr, vals
+        _i32, _int),                # out, start_block
+    "winnow_fps": (
+        _u64, _i64,                 # vals, counts
+        _int, _int,                 # nd, w
+        _u64, _i64),                # out_fps, out_nfp
+    "oph_minhash": (
+        _u64, _i64,                 # gh, counts
+        _int, _int, _uint,          # nd, n_hashes, densify_c
+        _u64),                      # out_sig (nd, n_hashes)
+    "simhash_batch": (
+        _u64, _i64,                 # wh, wc
+        _int,                       # nd
+        _u64),                      # out_sig
+    "huff_decode": (
+        _u8,                        # payload (+4 pad readable)
+        _u32, _u8,                  # lut_sym, lut_len
+        _int,                       # table_bits
+        _i64, _int,                 # seg_off, n_seg
+        _int, _int,                 # seg_syms, n
+        _u32),                      # out
+    "huff_encode": (
+        _i64, _int,                 # v, n
+        _u8, _u32,                  # sym_len, codes
+        _int,                       # seg_syms
+        _u8, _int,                  # out, out_cap
+        _u32),                      # seg_bytes
+    "pack_bits": (
+        _u64, _int, _int,           # v, n, width
+        _u8, _int),                 # out, out_cap
+    "unpack_bits": (
+        _u8, _int,                  # data, nbytes
+        _int, _int,                 # n, width
+        _u64),                      # out
+    "huff_code_lengths": (
+        _i64, _int,                 # counts, k
+        _int,                       # max_len
+        _u8),                       # lens_out
+}
 
 
 def _read_source() -> bytes | None:
@@ -161,112 +248,12 @@ def load():
         _LIB = False
         return None
 
-    from ctypes import POINTER, c_int64, c_uint8, c_uint16, c_uint64
-
-    lib.fsst_encode.restype = c_int64
-    lib.fsst_encode.argtypes = [
-        POINTER(c_uint8), c_int64,              # buf (n+8 readable), n
-        POINTER(c_int64), c_int64,              # str_lens, n_str
-        POINTER(c_uint16), POINTER(c_uint16),   # lut12, ones
-        POINTER(c_uint64), POINTER(c_uint16),   # sym_t, lc_t (nullable)
-        c_int64, c_int64,                       # hash_bits, walk_seg
-        POINTER(c_uint8), POINTER(c_int64),     # out (2n), enc_lens
-    ]
-    lib.png_defilter.restype = c_int64
-    lib.png_defilter.argtypes = [
-        POINTER(c_uint8), POINTER(c_uint8),     # data, filters
-        c_int64, c_int64, c_int64,              # h, w, ch
-        POINTER(c_uint8),                       # out
-    ]
-    lib.winnow_select.restype = c_int64
-    lib.winnow_select.argtypes = [
-        POINTER(c_uint64), POINTER(c_int64),    # vals, counts
-        c_int64, c_int64,                       # nd, w
-        POINTER(c_int64),                       # out_idx
-    ]
-    lib.slab_word_hashes.restype = c_int64
-    lib.slab_word_hashes.argtypes = [
-        POINTER(c_uint8), c_int64,              # buf, n
-        POINTER(c_int64), c_int64,              # doc_starts, nd
-        POINTER(c_uint64), POINTER(c_int64),    # out_wh, out_wc
-    ]
-    lib.slab_gram_hashes.restype = c_int64
-    lib.slab_gram_hashes.argtypes = [
-        POINTER(c_uint64), POINTER(c_int64),    # wh, wc
-        c_int64, c_int64, c_int64,              # nd, ngram, short_doc_gram
-        POINTER(c_uint64),                      # out_gh
-    ]
-    lib.winnow_fps.restype = c_int64
-    lib.winnow_fps.argtypes = [
-        POINTER(c_uint64), POINTER(c_int64),    # vals, counts
-        c_int64, c_int64,                       # nd, w
-        POINTER(c_uint64), POINTER(c_int64),    # out_fps, out_nfp
-    ]
-    from ctypes import POINTER as _P, c_int32
-
-    lib.jpeg_entropy_decode.restype = c_int64
-    lib.jpeg_entropy_decode.argtypes = [
-        POINTER(c_uint8), c_int64,              # data, n
-        c_int64, POINTER(c_int64), c_int64,     # n_mcus, sched, sched_n
-        c_int64,                                # n_comp
-        POINTER(c_int64), POINTER(c_int64),     # minc, maxc
-        POINTER(c_int64), POINTER(c_uint8),     # vptr, vals
-        _P(c_int32), c_int64,                   # out, start_block
-    ]
-    lib.oph_minhash.restype = c_int64
-    lib.oph_minhash.argtypes = [
-        POINTER(c_uint64), POINTER(c_int64),    # gh, counts
-        c_int64, c_int64, c_uint64,             # nd, n_hashes, densify_c
-        POINTER(c_uint64),                      # out_sig (nd, n_hashes)
-    ]
-    lib.simhash_batch.restype = c_int64
-    lib.simhash_batch.argtypes = [
-        POINTER(c_uint64), POINTER(c_int64),    # wh, wc
-        c_int64,                                # nd
-        POINTER(c_uint64),                      # out_sig
-    ]
-    from ctypes import c_uint32
-
-    lib.huff_decode.restype = c_int64
-    lib.huff_decode.argtypes = [
-        POINTER(c_uint8),                       # payload (+4 pad readable)
-        POINTER(c_uint32), POINTER(c_uint8),    # lut_sym, lut_len
-        c_int64,                                # table_bits
-        POINTER(c_int64), c_int64,              # seg_off, n_seg
-        c_int64, c_int64,                       # seg_syms, n
-        POINTER(c_uint32),                      # out
-    ]
-    lib.huff_encode.restype = c_int64
-    lib.huff_encode.argtypes = [
-        POINTER(c_int64), c_int64,              # v, n
-        POINTER(c_uint8), POINTER(c_uint32),    # sym_len, codes
-        c_int64,                                # seg_syms
-        POINTER(c_uint8), c_int64,              # out, out_cap
-        POINTER(c_uint32),                      # seg_bytes
-    ]
-    lib.huff_code_lengths.restype = c_int64
-    lib.huff_code_lengths.argtypes = [
-        POINTER(c_int64), c_int64,              # counts, k
-        c_int64,                                # max_len
-        POINTER(c_uint8),                       # lens_out
-    ]
-    lib.pack_bits.restype = c_int64
-    lib.pack_bits.argtypes = [
-        POINTER(c_uint64), c_int64, c_int64,    # v, n, width
-        POINTER(c_uint8), c_int64,              # out, out_cap
-    ]
-    lib.unpack_bits.restype = c_int64
-    lib.unpack_bits.argtypes = [
-        POINTER(c_uint8), c_int64,              # data, nbytes
-        c_int64, c_int64,                       # n, width
-        POINTER(c_uint64),                      # out
-    ]
+    for name, argtypes in _SIGNATURES.items():
+        fn = getattr(lib, name)
+        fn.restype = ctypes.c_int64
+        fn.argtypes = argtypes
     _LIB = lib
     return lib
-
-
-def _u8p(a):
-    return a.ctypes.data_as(ctypes.POINTER(ctypes.c_uint8))
 
 
 def fsst_encode(arr, lengths, tables, hash_bits: int, walk_seg: int):
@@ -274,8 +261,6 @@ def fsst_encode(arr, lengths, tables, hash_bits: int, walk_seg: int):
     the native library is unavailable. ``tables`` is the
     fsst._build_match_tables result; output is byte-identical to the
     NumPy walk (tests/test_native.py)."""
-    import numpy as np
-
     lib = load()
     if lib is None:
         return None
@@ -287,55 +272,17 @@ def fsst_encode(arr, lengths, tables, hash_bits: int, walk_seg: int):
     out = np.empty(2 * max(n, 1), dtype=np.uint8)
     enc_lens = np.empty(max(len(lengths), 1), dtype=np.int64)
     lengths = np.ascontiguousarray(lengths, dtype=np.int64)
-    p_i64 = ctypes.POINTER(ctypes.c_int64)
-    p_u16 = ctypes.POINTER(ctypes.c_uint16)
-    p_u64 = ctypes.POINTER(ctypes.c_uint64)
-    if h3 is not None:
-        sym_t, lc_t = h3
-        sym_p = sym_t.ctypes.data_as(p_u64)
-        lc_p = lc_t.ctypes.data_as(p_u16)
-    else:
-        sym_p = ctypes.cast(None, p_u64)
-        lc_p = ctypes.cast(None, p_u16)
+    sym_p, lc_p = (h3[0].ctypes, h3[1].ctypes) if h3 else (None, None)
     total = lib.fsst_encode(
-        _u8p(padded), n,
-        lengths.ctypes.data_as(p_i64), len(lengths),
-        lut12.ctypes.data_as(p_u16), ones.ctypes.data_as(p_u16),
-        sym_p, lc_p, hash_bits, walk_seg,
-        _u8p(out), enc_lens.ctypes.data_as(p_i64))
+        padded, n, lengths, len(lengths), lut12, ones,
+        sym_p, lc_p, hash_bits, walk_seg, out, enc_lens)
     return out[:total].tobytes(), enc_lens[:len(lengths)].copy()
-
-
-def winnow_select(vals, counts, w: int):
-    """C winnowing selection (one monotonic-deque pass, doc-boundary-
-    aware, squeeze folded in); returns int64 global indices of the
-    selected fingerprints, or None when the native library is
-    unavailable. Output indices select the same (doc, fingerprint)
-    multiset the NumPy tournament path selects (tests/test_native.py)."""
-    import numpy as np
-
-    lib = load()
-    if lib is None:
-        return None
-    vals = np.ascontiguousarray(vals, dtype=np.uint64)
-    counts = np.ascontiguousarray(counts, dtype=np.int64)
-    out = np.empty(max(vals.size, 1), dtype=np.int64)
-    p_i64 = ctypes.POINTER(ctypes.c_int64)
-    m = lib.winnow_select(
-        vals.ctypes.data_as(ctypes.POINTER(ctypes.c_uint64)),
-        counts.ctypes.data_as(p_i64), counts.size, w,
-        out.ctypes.data_as(p_i64))
-    if m < 0:
-        return None
-    return out[:m].copy()
 
 
 def slab_word_hashes(buf, doc_starts):
     """C word hashing over a document slab; returns (word_hashes uint64,
     word_counts int64) or None when unavailable. Bit-identical to the
     NumPy prefix-sum path (functions/similarity.py _slab_word_hashes)."""
-    import numpy as np
-
     lib = load()
     if lib is None:
         return None
@@ -344,11 +291,7 @@ def slab_word_hashes(buf, doc_starts):
     nd = doc_starts.size
     out_wh = np.empty((buf.size + 1) // 2 + 1, dtype=np.uint64)
     out_wc = np.empty(max(nd, 1), dtype=np.int64)
-    p_i64 = ctypes.POINTER(ctypes.c_int64)
-    p_u64 = ctypes.POINTER(ctypes.c_uint64)
-    m = lib.slab_word_hashes(
-        _u8p(buf), buf.size, doc_starts.ctypes.data_as(p_i64), nd,
-        out_wh.ctypes.data_as(p_u64), out_wc.ctypes.data_as(p_i64))
+    m = lib.slab_word_hashes(buf, buf.size, doc_starts, nd, out_wh, out_wc)
     return out_wh[:m].copy(), out_wc[:nd].copy()
 
 
@@ -356,19 +299,14 @@ def slab_gram_hashes(wh, wc, ngram: int, short_doc_gram: bool, total: int):
     """C rolling word-n-gram hashes; returns gram hashes uint64[total] or
     None when unavailable. ``total`` is the exact gram count the caller
     derives from ``wc`` (asserted against the kernel's own count)."""
-    import numpy as np
-
     lib = load()
     if lib is None:
         return None
     wh = np.ascontiguousarray(wh, dtype=np.uint64)
     wc = np.ascontiguousarray(wc, dtype=np.int64)
     out = np.empty(max(total, 1), dtype=np.uint64)
-    p_i64 = ctypes.POINTER(ctypes.c_int64)
-    p_u64 = ctypes.POINTER(ctypes.c_uint64)
-    m = lib.slab_gram_hashes(
-        wh.ctypes.data_as(p_u64), wc.ctypes.data_as(p_i64), wc.size,
-        ngram, 1 if short_doc_gram else 0, out.ctypes.data_as(p_u64))
+    m = lib.slab_gram_hashes(wh, wc, wc.size, ngram,
+                             1 if short_doc_gram else 0, out)
     if m != total:
         return None  # defensive: count mismatch -> NumPy path decides
     return out[:total]
@@ -378,8 +316,6 @@ def winnow_fps(vals, counts, w: int):
     """Fused C winnowing: selection + per-doc distinct/ascending sort in
     one pass; returns (fps uint64, n_fp int64[nd]) or None when
     unavailable. Identical to the NumPy batch path's output."""
-    import numpy as np
-
     lib = load()
     if lib is None:
         return None
@@ -387,12 +323,7 @@ def winnow_fps(vals, counts, w: int):
     counts = np.ascontiguousarray(counts, dtype=np.int64)
     out_fps = np.empty(max(vals.size, 1), dtype=np.uint64)
     out_nfp = np.empty(max(counts.size, 1), dtype=np.int64)
-    p_i64 = ctypes.POINTER(ctypes.c_int64)
-    p_u64 = ctypes.POINTER(ctypes.c_uint64)
-    m = lib.winnow_fps(
-        vals.ctypes.data_as(p_u64), counts.ctypes.data_as(p_i64),
-        counts.size, w,
-        out_fps.ctypes.data_as(p_u64), out_nfp.ctypes.data_as(p_i64))
+    m = lib.winnow_fps(vals, counts, counts.size, w, out_fps, out_nfp)
     if m < 0:
         return None
     return out_fps[:m].copy(), out_nfp[:counts.size].copy()
@@ -403,10 +334,8 @@ def jpeg_entropy_decode(data, n_mcus, sched, dc_sel, ac_sel, coefs,
     """C baseline-JPEG entropy decode of one restart segment; returns
     blocks written or None when unavailable (callers fall back to the
     Python bit reader with identical output)."""
-    import numpy as np
-
     lib = load()
-    if lib is None or not hasattr(lib, "jpeg_entropy_decode"):
+    if lib is None:
         return None
     n_comp = max(sched) + 1
     # flatten the huffman tables: per component, DC then AC —
@@ -423,27 +352,20 @@ def jpeg_entropy_decode(data, n_mcus, sched, dc_sel, ac_sel, coefs,
             vals[ci, ti, :tab.vals.size] = tab.vals
     buf = np.frombuffer(data, dtype=np.uint8)
     sched_a = np.asarray(sched, dtype=np.int64)
-    p_i64 = ctypes.POINTER(ctypes.c_int64)
-    p_i32 = ctypes.POINTER(ctypes.c_int32)
     rc = lib.jpeg_entropy_decode(
-        _u8p(np.ascontiguousarray(buf)), buf.size,
-        n_mcus, sched_a.ctypes.data_as(p_i64), sched_a.size, n_comp,
-        minc.ctypes.data_as(p_i64), maxc.ctypes.data_as(p_i64),
-        vptr.ctypes.data_as(p_i64), _u8p(vals),
-        coefs.ctypes.data_as(p_i32), start_block)
+        buf, buf.size, n_mcus, sched_a, sched_a.size, n_comp,
+        minc, maxc, vptr, vals, coefs, start_block)
     if rc < 0:
         raise ValueError(
             "JPEG: invalid huffman code or truncated entropy data"
             f" (native rc {rc})")
-    return int(rc)
+    return rc
 
 
 def png_defilter(data, filters, w: int, ch: int):
     """C PNG defilter; returns (h, w*ch) uint8 or None when unavailable.
     Callers pre-validate filter bytes (the kernel's error return is
     defensive only)."""
-    import numpy as np
-
     lib = load()
     if lib is None:
         return None
@@ -451,7 +373,7 @@ def png_defilter(data, filters, w: int, ch: int):
     filters = np.ascontiguousarray(filters, dtype=np.uint8)
     h = data.shape[0]
     out = np.empty((h, w * ch), dtype=np.uint8)
-    rc = lib.png_defilter(_u8p(data), _u8p(filters), h, w, ch, _u8p(out))
+    rc = lib.png_defilter(data, filters, h, w, ch, out)
     if rc != 0:
         raise ValueError(f"PNG: unknown row filter at row {-rc - 1}")
     return out
@@ -461,8 +383,6 @@ def oph_minhash(gh, counts, n_hashes: int, densify_c):
     """C one-permutation MinHash (bucket-min + rotation densify);
     returns uint64 (nd, n_hashes) or None when unavailable.
     Bit-identical to similarity._oph_signatures (property-tested)."""
-    import numpy as np
-
     lib = load()
     if lib is None:
         return None
@@ -470,11 +390,7 @@ def oph_minhash(gh, counts, n_hashes: int, densify_c):
     counts = np.ascontiguousarray(counts, dtype=np.int64)
     nd = counts.size
     out = np.empty((max(nd, 1), n_hashes), dtype=np.uint64)
-    lib.oph_minhash(
-        gh.ctypes.data_as(ctypes.POINTER(ctypes.c_uint64)),
-        counts.ctypes.data_as(ctypes.POINTER(ctypes.c_int64)),
-        nd, n_hashes, ctypes.c_uint64(int(densify_c)),
-        out.ctypes.data_as(ctypes.POINTER(ctypes.c_uint64)))
+    lib.oph_minhash(gh, counts, nd, n_hashes, int(densify_c), out)
     return out[:nd]
 
 
@@ -482,8 +398,6 @@ def simhash_batch(wh, wc):
     """C 64-bit SimHash (per-bit majority over word hashes); returns
     uint64[nd] or None when unavailable. Bit-identical to
     similarity.simhash64_batch's histogram path (property-tested)."""
-    import numpy as np
-
     lib = load()
     if lib is None:
         return None
@@ -491,10 +405,7 @@ def simhash_batch(wh, wc):
     wc = np.ascontiguousarray(wc, dtype=np.int64)
     nd = wc.size
     out = np.empty(max(nd, 1), dtype=np.uint64)
-    lib.simhash_batch(
-        wh.ctypes.data_as(ctypes.POINTER(ctypes.c_uint64)),
-        wc.ctypes.data_as(ctypes.POINTER(ctypes.c_int64)),
-        nd, out.ctypes.data_as(ctypes.POINTER(ctypes.c_uint64)))
+    lib.simhash_batch(wh, wc, nd, out)
     return out[:nd]
 
 
@@ -504,8 +415,6 @@ def huff_decode(payload, lut_sym, lut_len, table_bits: int, seg_off,
     None when unavailable. Byte-identical to huffman._decode_numpy with
     the same prefix LUT (property-tested). Raises ValueError on corrupt
     streams (invalid code / segment overrun), matching the NumPy path."""
-    import numpy as np
-
     lib = load()
     if lib is None:
         return None
@@ -518,13 +427,8 @@ def huff_decode(payload, lut_sym, lut_len, table_bits: int, seg_off,
     seg_off = np.ascontiguousarray(seg_off, dtype=np.int64)
     n_seg = seg_off.size - 1
     out = np.empty(max(int(n_seg * seg_syms), 1), dtype=np.uint32)
-    rc = lib.huff_decode(
-        _u8p(buf),
-        lut_sym.ctypes.data_as(ctypes.POINTER(ctypes.c_uint32)),
-        _u8p(lut_len), int(table_bits),
-        seg_off.ctypes.data_as(ctypes.POINTER(ctypes.c_int64)),
-        int(n_seg), int(seg_syms), int(n),
-        out.ctypes.data_as(ctypes.POINTER(ctypes.c_uint32)))
+    rc = lib.huff_decode(buf, lut_sym, lut_len, table_bits,
+                         seg_off, n_seg, seg_syms, n, out)
     if rc < 0:
         raise ValueError(
             f"huffman: corrupt stream in segment {-rc - 1}")
@@ -536,8 +440,6 @@ def huff_encode(v, sym_len, codes, seg_syms: int):
     per-segment byte lengths) or None when unavailable. Byte-identical
     to the NumPy bincount-lane path in huffman.encode (property-tested).
     Raises ValueError on a symbol with zero code length."""
-    import numpy as np
-
     lib = load()
     if lib is None:
         return None
@@ -551,12 +453,8 @@ def huff_encode(v, sym_len, codes, seg_syms: int):
     cap = 2 * n + n_seg + 8
     out = np.empty(cap, dtype=np.uint8)
     seg_bytes = np.empty(n_seg, dtype=np.uint32)
-    rc = lib.huff_encode(
-        v.ctypes.data_as(ctypes.POINTER(ctypes.c_int64)), int(n),
-        _u8p(sym_len),
-        codes.ctypes.data_as(ctypes.POINTER(ctypes.c_uint32)),
-        int(seg_syms), _u8p(out), int(cap),
-        seg_bytes.ctypes.data_as(ctypes.POINTER(ctypes.c_uint32)))
+    rc = lib.huff_encode(v, n, sym_len, codes, seg_syms, out, cap,
+                         seg_bytes)
     if rc == -1:
         raise ValueError("huffman.encode: symbol with zero code length")
     if rc < 0:
@@ -566,20 +464,18 @@ def huff_encode(v, sym_len, codes, seg_syms: int):
 
 def huff_code_lengths(counts, max_len: int):
     """C two-queue merge + T.81 K.3 Adjust_BITS code-length construction;
-    returns uint8[k] lens or None when unavailable. Byte-identical to
-    the NumPy/Python path in huffman.code_lengths (property-tested) —
-    the merge is a data-dependent sequential chain, so the Python loop
-    was ~4 ms/call at 4k symbols on the encode hot path (r8)."""
-    import numpy as np
-
+    returns uint8[k] lens, or None when unavailable or when more than
+    2**max_len symbols are present (no prefix code fits; the Python
+    path raises). Byte-identical to the NumPy/Python path in
+    huffman.code_lengths (property-tested) — the merge is a
+    data-dependent sequential chain, so the Python loop was ~4 ms/call
+    at 4k symbols on the encode hot path (r8)."""
     lib = load()
     if lib is None:
         return None
     c = np.ascontiguousarray(counts, dtype=np.int64)
     lens = np.zeros(max(c.size, 1), dtype=np.uint8)
-    rc = lib.huff_code_lengths(
-        c.ctypes.data_as(ctypes.POINTER(ctypes.c_int64)), int(c.size),
-        int(max_len), _u8p(lens))
+    rc = lib.huff_code_lengths(c, c.size, max_len, lens)
     if rc < 0:
         return None
     return lens[: c.size]
@@ -589,8 +485,6 @@ def pack_bits(vals, width: int):
     """C fixed-width MSB-first bit-pack; returns bytes or None when the
     kernel is unavailable. Byte-identical to bitpack.pack_uints's
     np.packbits matrix path (property-tested)."""
-    import numpy as np
-
     lib = load()
     if lib is None:
         return None
@@ -598,9 +492,7 @@ def pack_bits(vals, width: int):
     n = v.size
     cap = (n * width + 7) // 8 + 8
     out = np.empty(cap, dtype=np.uint8)
-    rc = lib.pack_bits(
-        v.ctypes.data_as(ctypes.POINTER(ctypes.c_uint64)), int(n),
-        int(width), _u8p(out), int(cap))
+    rc = lib.pack_bits(v, n, width, out, cap)
     if rc < 0:
         return None
     return out[:rc].tobytes()
@@ -610,16 +502,12 @@ def unpack_bits(data, width: int, n: int):
     """C inverse of pack_bits; returns uint64[n] or None when the kernel
     is unavailable. Raises ValueError on a truncated payload, matching
     bitpack.unpack_uints."""
-    import numpy as np
-
     lib = load()
     if lib is None:
         return None
     buf = np.frombuffer(data, dtype=np.uint8)
     out = np.empty(max(n, 1), dtype=np.uint64)
-    rc = lib.unpack_bits(
-        _u8p(buf), int(buf.size), int(n), int(width),
-        out.ctypes.data_as(ctypes.POINTER(ctypes.c_uint64)))
+    rc = lib.unpack_bits(buf, buf.size, n, width, out)
     if rc < 0:
         raise ValueError(
             f"bit-packed payload truncated: need {(n * width + 7) // 8} "

@@ -161,61 +161,6 @@ int64_t png_defilter(const uint8_t *data, const uint8_t *filters,
     return 0;
 }
 
-/* Winnowing window-minimum selection (Schleimer et al., SIGMOD 2003;
- * rightmost minimum on ties), doc-boundary-aware, with the
- * adjacent-repeat squeeze folded in. One monotonic-deque pass instead
- * of the NumPy path's log2(w) tournament passes + boundary masks.
- *
- * vals:   concatenated per-doc gram hashes (docs contiguous);
- * counts: grams per doc, nd entries;
- * w:      window length (>= 1).
- * out_idx (caller-sized to the total gram count) receives GLOBAL
- * indices of selected fingerprints: per doc with >= w grams, the
- * squeezed rightmost window minima; per doc with 1..w-1 grams, the
- * rightmost overall minimum (the paper's short-doc convention).
- * Returns the number of indices written, or -1 on allocation failure.
- */
-int64_t winnow_select(const uint64_t *vals, const int64_t *counts,
-                      int64_t nd, int64_t w, int64_t *out_idx)
-{
-    int64_t cap = (w > 0 ? w : 1) + 1;
-    int64_t *deq = (int64_t *)malloc((size_t)cap * sizeof(int64_t));
-    if (!deq)
-        return -1;
-    int64_t off = 0, m = 0;
-    for (int64_t d = 0; d < nd; d++) {
-        int64_t cnt = counts[d];
-        if (cnt <= 0)
-            continue;
-        if (cnt < w) {
-            int64_t best = off;
-            for (int64_t i = off + 1; i < off + cnt; i++)
-                if (vals[i] <= vals[best])   /* <= : rightmost min */
-                    best = i;
-            out_idx[m++] = best;
-        } else {
-            /* ring-buffer deque: head/tail are monotonically increasing
-             * counters, slots indexed mod cap; size stays <= w + 1 */
-            int64_t head = 0, tail = 0, last = -1;
-            for (int64_t i = off; i < off + cnt; i++) {
-                while (tail > head && vals[deq[(tail - 1) % cap]] >= vals[i])
-                    tail--;                  /* >= : newer wins ties */
-                deq[tail % cap] = i;
-                tail++;
-                if (deq[head % cap] <= i - w)
-                    head++;
-                if (i >= off + w - 1 && deq[head % cap] != last) {
-                    out_idx[m++] = deq[head % cap];
-                    last = deq[head % cap];
-                }
-            }
-        }
-        off += cnt;
-    }
-    free(deq);
-    return m;
-}
-
 /* ------------------------------------------------------------------ *
  * Rolling-hash text kernels (mirror functions/similarity.py exactly:
  * polynomial hash mod 2^64 with multiplier P, splitmix64 finalizer,
@@ -446,13 +391,18 @@ int64_t jpeg_entropy_decode(const uint8_t *data, int64_t n,
     return bi - start_block;
 }
 
-/* Fused winnowing fingerprints: selection (as winnow_select) plus the
- * per-doc DISTINCT + ascending sort the Python batch path does with
- * global radix argsorts. Selections per doc are few (density 2/(w+1))
- * and already position-ordered, so a per-doc insertion-style
+/* Fused winnowing fingerprints (Schleimer et al., SIGMOD 2003): the
+ * window-minimum selection (rightmost minimum on ties, doc-boundary-
+ * aware, adjacent repeats squeezed) as one monotonic-deque pass, plus
+ * the per-doc DISTINCT + ascending sort the Python batch path does with
+ * global radix argsorts. Docs with 1..w-1 grams select their overall
+ * minimum (the paper's short-doc convention). Selections per doc are
+ * few (density 2/(w+1)) and already position-ordered, so a per-doc
  * sort+unique is cache-resident and removes ~1/3 of the batch wall.
- * out_fps: caller-sized to the gram total; out_nfp: int64[nd].
- * Returns total fingerprints written, or -1 on allocation failure. */
+ * vals: concatenated per-doc gram hashes; counts: grams per doc (nd);
+ * w: window length. out_fps: caller-sized to the gram total; out_nfp:
+ * int64[nd]. Returns total fingerprints written, or -1 on allocation
+ * failure. */
 
 static int cmp_u64(const void *a, const void *b)
 {
@@ -782,7 +732,9 @@ int64_t unpack_bits(const uint8_t *data, int64_t nbytes, int64_t n,
  * unvectorizable in NumPy, hence this kernel (r8: ~4 ms/call in Python
  * at 4k symbols, called once per eligible int stream on the encode hot
  * path). Fills lens_out[k] (0 = unused symbol); returns the number of
- * present symbols, or -1 on allocation failure (caller falls back).
+ * present symbols, or -1 when more than 2^max_len symbols are present
+ * (no prefix code fits; Adjust_BITS would run off the histogram) or on
+ * allocation failure (caller falls back).
  */
 typedef struct { int64_t w; int64_t idx; } hclw;
 
@@ -801,6 +753,8 @@ int64_t huff_code_lengths(const int64_t *counts, int64_t k,
         for (i = 0; i < k; i++) if (counts[i] > 0) { lens_out[i] = 1; break; }
         return 1;
     }
+    if (max_len < 0 || (max_len < 62 && m > ((int64_t)1 << max_len)))
+        return -1;
     hclw *order = (hclw *)malloc((size_t)m * sizeof(hclw));
     int64_t *leaf_w = (int64_t *)malloc((size_t)m * sizeof(int64_t));
     int64_t *node_w = (int64_t *)malloc((size_t)(m - 1) * sizeof(int64_t));

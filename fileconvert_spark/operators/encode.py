@@ -870,20 +870,6 @@ def consolidate_part_dicts(fam_rows: list[dict], all_columns: list[str],
     return out
 
 
-def decode_chunk_table(enc_tbl: pa.Table, column_order: list[str]) -> pa.Table:
-    """Decode one chunk's enc rows back into the original columns."""
-    by_col = {}
-    for row in enc_tbl.to_pylist():  # one C-level conversion, no as_py loop
-        by_col[row["column"]] = decode_column(
-            row["codec"], row["payload"], row["dict"], row["meta"],
-            row["n_rows"], row["validity"],
-            expect_sha=row.get("sha256_chunk"),
-            ctx=f"part={row['part_id']} chunk={row['chunk_id']} "
-                f"column={row['column']}")
-    arrays = [by_col[c] for c in column_order]
-    return pa.Table.from_arrays(arrays, names=column_order)
-
-
 def make_encode_fn(chunk_rows: int = DEFAULT_CHUNK_ROWS,
                    chunk_bytes: int = DEFAULT_CHUNK_BYTES,
                    part_id_col: str | None = None,

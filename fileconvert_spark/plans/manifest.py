@@ -570,16 +570,10 @@ def encode_table(spark, df, out_dir: str, n_buckets: int | None = None,
         # part bytes and shas. One JVM-side hash per row — no Python,
         # no extra shuffle; the tiebreak only costs comparisons inside
         # tie runs the sort already had to order arbitrarily.
-        # FCS_NO_SORT_TIEBREAK=1 drops the tiebreak (ops A/B switch:
-        # byte-reproducibility off, sort cost measurement)
-        if os.environ.get("FCS_NO_SORT_TIEBREAK"):
-            shuffled = shuffled.sortWithinPartitions("bucket", *cluster_by)
-        else:
-            tie = F.xxhash64(*[F.col(c) for c in df.columns])
-            shuffled = (shuffled.withColumn("_fcs_tie", tie)
-                        .sortWithinPartitions("bucket", *cluster_by,
-                                              "_fcs_tie")
-                        .drop("_fcs_tie"))
+        tie = F.xxhash64(*[F.col(c) for c in df.columns])
+        shuffled = (shuffled.withColumn("_fcs_tie", tie)
+                    .sortWithinPartitions("bucket", *cluster_by, "_fcs_tie")
+                    .drop("_fcs_tie"))
     man_df = shuffled.mapInArrow(
         make_write_kernel(out_dir, chunk_rows, chunk_bytes, "bucket",
                           zone_cols=zone_cols,

@@ -156,41 +156,6 @@ def test_native_disabled_by_env(monkeypatch):
 
 
 @requires_native
-@settings(max_examples=40, deadline=None)
-@given(st.lists(st.lists(st.integers(min_value=0, max_value=6),
-                         max_size=40), max_size=12),
-       st.integers(min_value=1, max_value=6))
-def test_winnow_select_matches_numpy_tournament(docs, w):
-    """Property: the C deque selection and the NumPy tournament path pick
-    the SAME per-doc fingerprint sets for arbitrary doc shapes (empty
-    docs, short docs, heavy value ties — the 0..6 alphabet forces tie
-    runs) and any window length."""
-    vals = np.array([v for d in docs for v in d], dtype=np.uint64)
-    counts = np.array([len(d) for d in docs], dtype=np.int64)
-    sel = native.winnow_select(vals, counts, w)
-    assert sel is not None
-
-    # NumPy reference: per doc, rightmost window minima (or whole-doc
-    # min when < w grams), deduped — brute force
-    doc_of = np.repeat(np.arange(counts.size), counts)
-    want = set()
-    off = 0
-    for d, cnt in enumerate(counts):
-        seg = vals[off:off + cnt]
-        if cnt > 0:
-            if cnt < w:
-                want.add((d, int(seg.min())))
-            else:
-                for s in range(cnt - w + 1):
-                    win = seg[s:s + w]
-                    m = win.min()
-                    want.add((d, int(m)))
-        off += cnt
-    got = {(int(doc_of[i]), int(vals[i])) for i in sel}
-    assert got == want
-
-
-@requires_native
 def test_winnow_batch_native_equals_numpy_path():
     """Full winnow_fingerprints_batch output must be identical with and
     without the native kernel, across batch profiles (short docs,
@@ -388,15 +353,19 @@ def test_unpack_bits_kernel_truncation_raises():
 
 @requires_native
 @settings(max_examples=150, deadline=None)
-@given(st.lists(st.integers(min_value=0, max_value=100000),
-                max_size=600),
-       st.integers(min_value=5, max_value=16))
-def test_huff_code_lengths_kernel_matches_python(counts, max_len):
+@given(st.integers(min_value=5, max_value=16).flatmap(
+    lambda max_len: st.tuples(
+        st.lists(st.integers(min_value=0, max_value=100000),
+                 max_size=min(600, 1 << max_len)),
+        st.just(max_len))))
+def test_huff_code_lengths_kernel_matches_python(counts_max_len):
     """huff_code_lengths (r8) must reproduce the Python two-queue +
     T.81 Adjust_BITS construction exactly — same lengths for every
-    symbol, including stable tie-breaking on equal counts."""
+    symbol, including stable tie-breaking on equal counts. At most
+    2**max_len symbols, so a max_len-bit prefix code always exists."""
     from fileconvert_spark.functions import huffman
 
+    counts, max_len = counts_max_len
     c = np.array(counts, dtype=np.int64)
     got = native.huff_code_lengths(c, max_len)
     want = huffman._code_lengths_py(c, max_len)
@@ -416,3 +385,57 @@ def test_huff_code_lengths_kernel_skewed_large_alphabet():
     want = huffman._code_lengths_py(c, 16)
     assert np.array_equal(got, want)
     assert int(got.max()) <= 16
+
+
+@requires_native
+def test_huff_code_lengths_infeasible_alphabet_rejected():
+    """64 present symbols cannot all get codes of at most 5 bits: the
+    kernel declines (None) without writing past its buffers and the
+    public entry point raises instead of returning a broken code."""
+    from fileconvert_spark.functions import huffman
+
+    counts = np.full(64, 10, np.int64)
+    assert native.huff_code_lengths(counts, 5) is None
+    with pytest.raises(ValueError, match="64 symbols"):
+        huffman.code_lengths(counts, 5)
+    with pytest.raises(ValueError, match="64 symbols"):
+        huffman._code_lengths_py(counts, 5)
+
+
+def test_signatures_match_kernel_source():
+    """_SIGNATURES names exactly the exported (non-static int64_t)
+    functions of kernels.c, each with its C parameter count."""
+    import re
+
+    src = open(os.path.join(os.path.dirname(native.__file__),
+                            "kernels.c")).read()
+    defined = {name: params.count(",") + 1 for name, params in re.findall(
+        r"^int64_t\s+(\w+)\s*\(([^)]*)\)", src, flags=re.M)}
+    assert defined == {name: len(argtypes)
+                       for name, argtypes in native._SIGNATURES.items()}
+
+
+def _valid_args(argtypes):
+    return [np.zeros(8, at._dtype_) if hasattr(at, "_dtype_")
+            else None if at is native._nullable else 0
+            for at in argtypes]
+
+
+@requires_native
+@pytest.mark.parametrize("name", sorted(native._SIGNATURES))
+def test_kernel_boundary_rejects_bad_arrays(name):
+    """A wrong-dtype or non-contiguous array in the first array slot is
+    refused by ctypes before the kernel runs."""
+    import ctypes
+
+    argtypes = native._SIGNATURES[name]
+    slot = next(i for i, at in enumerate(argtypes) if hasattr(at, "_dtype_"))
+    dtype = argtypes[slot]._dtype_
+    fn = getattr(native.load(), name)
+    assert tuple(fn.argtypes) == argtypes
+    argtypes[slot].from_param(np.zeros(8, dtype))     # the right array
+    for bad in (np.zeros(8, np.float64), np.zeros(16, dtype)[::2]):
+        args = _valid_args(argtypes)
+        args[slot] = bad
+        with pytest.raises(ctypes.ArgumentError, match="array must have"):
+            fn(*args)

@@ -115,3 +115,12 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) >= 1
     assert all(r["sha_mismatches"] == 0 for r in rows)
+
+
+@pytest.mark.parametrize("conf,want", [
+    ("128m", 128 << 20), ("128MB", 128 << 20),
+    ("134217728b", 134217728), ("134217728", 134217728),
+    ("1g", 1 << 30), ("64kb", 64 << 10), ("junk", 128 << 20),
+])
+def test_parse_max_partition_bytes(conf, want):
+    assert entry_mod._parse_bytes(conf) == want
