@@ -964,6 +964,37 @@ def encode_df(df, chunk_rows: int = DEFAULT_CHUNK_ROWS,
     )
 
 
+def assemble_chunk(rows: dict[str, dict], column_order: list[str],
+                   pages: dict[str, bytes] | None = None) -> pa.RecordBatch:
+    """Decode one chunk's enc rows (``column -> row``) into a record batch
+    of ``column_order`` — the chunk assembler of both decoders (decode_df
+    and plans/manifest.py decode_table). Every column is integrity
+    checked against its ``sha256_chunk`` and errors name the
+    part/chunk/column; ``pages`` maps column -> the part's dictionary-page
+    blob for dp chunks (consolidate_part_dicts). A chunk missing a
+    column's row is corruption and raises DecodeError."""
+    first = next(iter(rows.values()))
+    where = f"part={first['part_id']} chunk={first['chunk_id']}"
+    missing = [c for c in column_order if c not in rows]
+    if missing:
+        raise DecodeError(
+            f"decode: chunk {where} is incomplete — missing encoded columns "
+            f"{missing} (have {sorted(rows)}); the manifest and the encoded "
+            "rows disagree (torn write or mixed manifests?)")
+    pages = pages or {}
+    arrays = []
+    for c in column_order:
+        row = rows[c]
+        a = decode_column(row["codec"], row["payload"], row["dict"],
+                          row["meta"], row["n_rows"], row["validity"],
+                          expect_sha=row.get("sha256_chunk"),
+                          ctx=f"{where} column={c}", page_dict=pages.get(c))
+        if isinstance(a, pa.ChunkedArray):
+            a = a.combine_chunks()
+        arrays.append(a)
+    return pa.RecordBatch.from_arrays(arrays, names=column_order)
+
+
 def decode_df(enc_df, src_schema):
     """enc DataFrame -> original DataFrame (bit-identical values).
 
@@ -974,43 +1005,16 @@ def decode_df(enc_df, src_schema):
     to Arrow record batches — no pandas on the decode path, so every
     Arrow type the codecs support (incl. struct/map/list) flows through.
 
-    Part dictionary pages (consolidate_part_dicts): the (part, chunk)
-    grouping separates a dp chunk from its page row, so pages are split
-    off and LEFT-JOINED back onto chunk rows by (part_id, column) before
-    the repartition — the generic path pays the page bytes once per
-    referencing chunk in the shuffle (the narrow decode_table path reads
-    them in place for free; this fallback works on any enc DataFrame).
+    Input is encode_df output, which never carries part dictionary pages
+    (only encoded table directories do; read those with
+    plans/manifest.py decode_table). Pages are not joined back here, so
+    a chunk that references one raises DecodeError.
     """
-    from pyspark.sql import functions as F
-
     column_order = [f.name for f in src_schema.fields]
-    enc_df = enc_df.filter(F.col("chunk_id") != PAGE_CHUNK_ID).join(
-        enc_df.filter((F.col("chunk_id") == PAGE_CHUNK_ID)
-                      & F.col("dict").isNotNull())
-        .select("part_id", "column",
-                F.col("dict").alias("_page_dict")),
-        ["part_id", "column"], "left")
+    needed = set(column_order)
 
     def decode_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         groups: dict[tuple[int, int], dict[str, dict]] = {}
-        expected = len(column_order)
-
-        def build(cols: dict[str, dict]) -> pa.RecordBatch:
-            arrays = []
-            for c in column_order:
-                row = cols[c]
-                a = decode_column(row["codec"], row["payload"], row["dict"],
-                                  row["meta"], row["n_rows"], row["validity"],
-                                  expect_sha=row.get("sha256_chunk"),
-                                  ctx=f"part={row['part_id']} "
-                                      f"chunk={row['chunk_id']} column={c}",
-                                  page_dict=row.get("_page_dict"))
-                if isinstance(a, pa.ChunkedArray):
-                    a = a.combine_chunks()
-                arrays.append(a)
-            return pa.RecordBatch.from_arrays(arrays, names=column_order)
-
-        needed = set(column_order)
         for b in batches:
             for row in b.to_pylist():  # few rows per batch; blobs copy once
                 if row["column"] not in needed:
@@ -1018,15 +1022,10 @@ def decode_df(enc_df, src_schema):
                 key = (row["part_id"], row["chunk_id"])
                 cols = groups.setdefault(key, {})
                 cols[row["column"]] = row
-                if len(cols) == expected:  # chunk complete -> emit eagerly
-                    yield build(groups.pop(key))
-        for key, cols in groups.items():  # incomplete chunks are corruption
-            missing = needed - set(cols)
-            raise ValueError(
-                f"decode: chunk part_id={key[0]} chunk_id={key[1]} is "
-                f"incomplete — missing encoded columns {sorted(missing)} "
-                f"(have {sorted(cols)}); the manifest and the encoded rows "
-                "disagree (torn write or mixed manifests?)")
+                if len(cols) == len(column_order):  # complete -> emit eagerly
+                    yield assemble_chunk(groups.pop(key), column_order)
+        for cols in groups.values():  # incomplete: assemble_chunk raises
+            yield assemble_chunk(cols, column_order)
 
     return (
         enc_df.repartition("part_id", "chunk_id")

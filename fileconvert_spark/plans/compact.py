@@ -3,12 +3,12 @@ the engine format (SURVEY.md §2 B13/B14 lifecycle companion).
 
 Why it exists: the streaming incremental encoder (streaming/incremental.py)
 and any fine-bucketed job accrete SMALL part files over time. Decode-side
-task grouping (decode_table ``task_target_bytes``) already keeps read
-parallelism healthy, but the file COUNT itself still grows without bound —
-manifest-list size, listdir cost, object-store GET count, and per-file
-footer overhead all scale with parts, not bytes. Compaction merges runs of
-consecutive small parts into ~target-size parts WITHOUT decoding a single
-value:
+task grouping (decode_table packs consecutive parts into ~64 MiB tasks)
+already keeps read parallelism healthy, but the file COUNT itself still
+grows without bound — manifest-list size, listdir cost, object-store GET
+count, and per-file footer overhead all scale with parts, not bytes.
+Compaction merges runs of consecutive small parts into ~target-size parts
+WITHOUT decoding a single value:
 
 - chunk payloads move byte-identical (codecs are chunk-local by design);
 - part dictionary pages (format v4) are first expanded back into
@@ -185,14 +185,12 @@ def _merge_group(out_dir: str, new_pid: int, src_pids: list[int],
     # cross-part dictionary-page consolidation over the merged part: the
     # whole point of merging clustered small parts — value overlap that
     # per-part pages could not capture
-    if not os.environ.get("FCS_NO_DICTPAGES"):
-        fam = [r for r in merged if r["codec"] in DICT_FAMILY]
-        if fam:
-            new_rows = consolidate_part_dicts(fam, sorted(all_cols),
-                                              new_pid)
-            if new_rows is not None:
-                merged = [r for r in merged
-                          if r["codec"] not in DICT_FAMILY] + new_rows
+    fam = [r for r in merged if r["codec"] in DICT_FAMILY]
+    if fam:
+        new_rows = consolidate_part_dicts(fam, sorted(all_cols), new_pid)
+        if new_rows is not None:
+            merged = [r for r in merged
+                      if r["codec"] not in DICT_FAMILY] + new_rows
     tbl = pa.Table.from_pylist(merged, schema=ENC_ARROW_SCHEMA)
     if ki_cols:
         _merge_sidecars(out_dir, new_pid, src_pids, ki_cols)

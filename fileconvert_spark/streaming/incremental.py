@@ -24,45 +24,40 @@ class _state_partitions:
     32 state partitions and 0.86 s with 8 — the delta is pure store
     overhead). Scale-adaptive, not a local constant: one state partition
     per ~8 MB of input, floored at 8 and capped at the session setting,
-    so multi-GB inputs keep the full session width. Env
-    FCS_STREAM_STATE_PARTS pins an explicit count (ops override).
+    so multi-GB inputs keep the full session width.
 
     The count is part of a CHECKPOINT's identity — these operators run
     fresh AvailableNow queries with fresh checkpoints, which is the only
     reason resizing per call is safe. The session conf is restored on
     exit (the streaming query has consumed it by then: AvailableNow
     planning happens inside awaitTermination, before this block ends).
+
+    Assumes a single-threaded session: the conf is session-global while
+    the block runs, so a query planned concurrently on the same
+    SparkSession from another thread would inherit the resized count.
     """
 
-    def __init__(self, spark: SparkSession, path: str,
-                 override: int | None = None) -> None:
+    def __init__(self, spark: SparkSession, path: str) -> None:
         import os
 
         self.spark = spark
-        sess = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        env = os.environ.get("FCS_STREAM_STATE_PARTS")
-        if override is not None:
-            self.target = int(override)
-        elif env:
-            self.target = int(env)
-        else:
-            nbytes = 0
-            try:
-                if os.path.isfile(path):
-                    nbytes = os.path.getsize(path)
-                else:
-                    for root, _d, files in os.walk(path):
-                        nbytes += sum(os.path.getsize(os.path.join(root, f))
-                                      for f in files
-                                      if not f.startswith(("_", ".")))
-            except OSError:
-                nbytes = 0
-            if nbytes <= 0:
-                self.target = sess  # unknown input size: change nothing
-            else:
-                self.target = max(8, min(sess, int(nbytes // (8 << 20))
-                                         or 8))
         self.prev = spark.conf.get("spark.sql.shuffle.partitions")
+        sess = int(self.prev)
+        nbytes = 0
+        try:
+            if os.path.isfile(path):
+                nbytes = os.path.getsize(path)
+            else:
+                for root, _d, files in os.walk(path):
+                    nbytes += sum(os.path.getsize(os.path.join(root, f))
+                                  for f in files
+                                  if not f.startswith(("_", ".")))
+        except OSError:
+            nbytes = 0
+        if nbytes <= 0:
+            self.target = sess  # unknown input size: change nothing
+        else:
+            self.target = max(8, min(sess, int(nbytes // (8 << 20)) or 8))
 
     def __enter__(self) -> "_state_partitions":
         self.spark.conf.set("spark.sql.shuffle.partitions",

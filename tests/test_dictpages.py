@@ -1,5 +1,5 @@
 """Part dictionary-page consolidation (consolidate_part_dicts):
-profit gating, roundtrip through both decode paths, predicate pruning
+profit gating, roundtrip through the table decode, predicate pruning
 with pages present, and page-integrity failure modes."""
 
 import json
@@ -123,21 +123,6 @@ def test_pages_present_and_roundtrip_narrow(spark, paged_table):
     rep = assert_roundtrip(df, decode_table(spark, out),
                            ["repo", "path", "commit"])
     assert rep["value_mismatches"] == 0 and rep["sha_mismatches"] == 0
-
-
-def test_pages_roundtrip_wide_path(spark, paged_table):
-    from fileconvert_spark.plans.manifest import decode_table
-
-    df, out = paged_table
-    wide = decode_table(spark, out, narrow=False)
-    assert wide.count() == df.count()
-    cols = sorted(df.columns)
-    agg = lambda d: d.select(  # noqa: E731 - order-free content hash
-        F.sha2(F.concat_ws("\x01", *[F.col(c) for c in cols]), 256)
-        .alias("h")).agg(F.count(F.lit(1)),
-                         F.sum(F.conv(F.substring("h", 1, 8), 16, 10)
-                               .cast("long"))).first()
-    assert agg(wide) == agg(decode_table(spark, out))
 
 
 def test_pages_survive_predicate_pruning(spark, paged_table):

@@ -190,3 +190,36 @@ def test_resume_keeps_pinned_index_cols(spark, tmp_path):
     assert fsio.exists(os.path.join(out, "indexes", "part-00001.path.idx"))
     meta = json.loads(fsio.read_bytes(os.path.join(out, "_meta.json")))
     assert meta["key_index_cols"] == ["path"]
+
+
+def test_decode_reads_table_metadata_once(spark, tmp_path, monkeypatch):
+    """A predicate decode of a key-indexed, clustered table reads each of
+    _meta.json, _schema.json and _manifest_list.json at most once on the
+    driver (format check, pruning warnings, key-index planning and task
+    grouping share one load)."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from fileconvert_spark.corpus import make_codefiles
+    from fileconvert_spark.plans import fsio
+
+    out = str(tmp_path / "enc")
+    df = spark.createDataFrame(make_codefiles(1000))
+    encode_table(spark, df, out, n_buckets=4, cluster_by=("repo",),
+                 key_index_cols=("path",))
+    assert fsio.exists(os.path.join(out, "_manifest_list.json"))
+    key = df.select("path").collect()[123][0]
+
+    reads: Counter = Counter()
+    real = fsio.read_bytes
+
+    def counting(path):
+        reads[os.path.basename(path)] += 1
+        return real(path)
+
+    monkeypatch.setattr(fsio, "read_bytes", counting)
+    got = decode_table(spark, out, predicate=("path", "=", key)).count()
+    assert got == df.filter(F.col("path") == key).count() > 0
+    for name in ("_meta.json", "_schema.json", "_manifest_list.json"):
+        assert reads[name] <= 1, (name, dict(reads))

@@ -1304,6 +1304,56 @@ def test_streaming_session_windows(spark, tmp_path):
     assert rows == [(7, 1), (7, 2), (8, 1)], rows
 
 
+def test_streaming_operators_restore_shuffle_partitions(spark, tmp_path,
+                                                        monkeypatch):
+    """The streaming operators resize spark.sql.shuffle.partitions (their
+    state-store width) only while they run, on a single-threaded session:
+    two sequential AvailableNow operators each leave the session value
+    exactly as they found it."""
+    import datetime as dt
+    import glob
+    import os as _os
+    import shutil as _sh
+
+    from fileconvert_spark.streaming import incremental as inc
+
+    targets = []
+    enter = inc._state_partitions.__enter__
+
+    def recording_enter(self):
+        targets.append(self.target)
+        return enter(self)
+
+    monkeypatch.setattr(inc._state_partitions, "__enter__", recording_enter)
+
+    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
+    src = str(tmp_path / "conf_src")
+    _os.makedirs(src)
+    d = str(tmp_path / "tmp_c")
+    spark.createDataFrame(
+        [(1, t0, "click", 1.0, 7),
+         (2, t0 + dt.timedelta(minutes=6), "view", 2.0, 8)],
+        "event_id long, ts timestamp, event_type string, value double, "
+        "user_id long"
+    ).coalesce(1).write.parquet(d)
+    f1 = _os.path.join(src, "f1.parquet")
+    _sh.move(glob.glob(_os.path.join(d, "part-*.parquet"))[0], f1)
+    schema = spark.read.parquet(f1).schema
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "24")
+    try:
+        inc.windowed_event_counts(spark, f1, schema).collect()
+        assert spark.conf.get(key) == "24"
+        inc.session_event_counts(spark, src, schema).collect()
+        assert spark.conf.get(key) == "24"
+    finally:
+        spark.conf.set(key, prev)
+    # a tiny input sizes the state to the floor: the conf really moved
+    assert targets == [8, 8]
+
+
 def test_winnow_overlap_finds_lifted_paragraph(spark):
     """A paragraph lifted from doc 1 into the middle of a LARGER doc 2
     must surface as a high-containment pair; an unrelated doc must not

@@ -99,7 +99,7 @@ def test_lsh_band_join_carries_no_text(spark):
 def test_grouped_decode_single_exchange(spark):
     """decode_df must shuffle compressed bytes exactly once (the
     (part_id, chunk_id) co-location repartition) and decode via
-    mapInArrow — no pandas stages, no extra exchanges."""
+    mapInArrow — no pandas stages, no joins, no extra exchanges."""
     from fileconvert_spark.operators.encode import decode_df, encode_df
 
     docs = spark.read.parquet(os.path.join(SF, "documents.parquet"))
@@ -112,6 +112,7 @@ def test_grouped_decode_single_exchange(spark):
     assert n_exchanges == 1, p
     assert "MapInArrow" in p or "mapinarrow" in p.lower()
     assert "FlatMapGroupsInPandas" not in p
+    assert "Join" not in p, p
 
 
 def test_contamination_exact_is_broadcast_semi_join(spark):
