@@ -19,6 +19,7 @@ import os
 import re
 import sys
 import tempfile
+from collections import OrderedDict
 from collections.abc import Callable
 
 _REPO = os.path.dirname(os.path.abspath(__file__))
@@ -38,7 +39,7 @@ def _ensure_workers(spark: SparkSession) -> None:
         pass  # already added
 
 
-_T_CACHE: dict[tuple[str, str], DataFrame] = {}
+_T_CACHE: OrderedDict[tuple[str, str], DataFrame] = OrderedDict()
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -48,16 +49,16 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     suite for the same static files. Only the unevaluated plan object is
     reused (scans still read the parquet files on every action — nothing
     materialized is cached); keyed by applicationId so a new session
-    never sees another session's plan objects."""
+    never sees another session's plan objects. Bounded LRU of 256."""
     key = (spark.sparkContext.applicationId,
            os.path.abspath(os.path.join(sf_dir, f"{name}.parquet")))
-    df = _T_CACHE.get(key)
-    if df is None:
-        df = spark.read.parquet(key[1])
+    if key in _T_CACHE:
+        _T_CACHE.move_to_end(key)
+    else:
+        _T_CACHE[key] = spark.read.parquet(key[1])
         if len(_T_CACHE) > 256:
-            _T_CACHE.clear()
-        _T_CACHE[key] = df
-    return df
+            _T_CACHE.popitem(last=False)
+    return _T_CACHE[key]
 
 
 # --------------------------------------------------------------- flagship

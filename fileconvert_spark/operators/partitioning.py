@@ -22,6 +22,7 @@ the north rule ("partitioning / shuffle / skew handled explicitly").
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 
@@ -176,9 +177,12 @@ def plan_buckets(
     }
 
     if assignments:
-        map_df = spark.createDataFrame(
-            assignments, schema=f"{key_col} string, _shards array<int>"
-        )
+        # from Arrow, so it plans as a LocalTableScan: no Python task.
+        # Keys cast to string the way a "string" schema coerces them
+        keys, shards = zip(*assignments)
+        map_df = spark.createDataFrame(pa.table({
+            key_col: pa.array(keys).cast(pa.string()),
+            "_shards": pa.array(shards, pa.list_(pa.int32()))}))
         df2 = df.join(F.broadcast(map_df), key_col, "left")
         # row's shard = salt hash mod the key's shard count; bucket =
         # that shard's LPT-assigned bucket (1 shard -> plain assignment)

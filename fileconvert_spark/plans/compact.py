@@ -198,7 +198,9 @@ def _merge_group(out_dir: str, new_pid: int, src_pids: list[int],
                            extra={"src_parts": [int(p) for p in src_pids]})
 
 
-def make_compact_kernel(out_dir: str, ki_cols: list[str] | None = None):
+def make_compact_kernel(out_dir: str, plan: list[tuple[int, list[int]]],
+                        ki_cols: list[str] | None = None):
+    """mapInArrow kernel over ``spark.range``: id i merges ``plan[i]``."""
     man_schema = pa.schema([
         ("part_id", pa.int32()), ("n_rows", pa.int64()),
         ("n_chunks", pa.int32()), ("raw_bytes", pa.int64()),
@@ -211,15 +213,12 @@ def make_compact_kernel(out_dir: str, ki_cols: list[str] | None = None):
         t0 = time.time()
         rows = []
         for b in batches:
-            for i in range(b.num_rows):
-                new_pid = int(b.column(0)[i].as_py())
-                src_pids = json.loads(b.column(1)[i].as_py())
+            for gid in b.column(0).to_pylist():
+                new_pid, src_pids = plan[gid]
                 rows.append(_merge_group(out_dir, new_pid, src_pids, t0,
                                          ki_cols=ki_cols))
         if rows:
-            arrays = [pa.array([r[f.name] for r in rows], type=f.type)
-                      for f in man_schema]
-            yield pa.RecordBatch.from_arrays(arrays, schema=man_schema)
+            yield pa.RecordBatch.from_pylist(rows, schema=man_schema)
 
     return fn
 
@@ -322,11 +321,9 @@ def compact_table(spark, out_dir: str, target_bytes: int = 64 << 20) -> dict:
     if fsio.exists(meta_path):
         ki_cols = list(json.loads(fsio.read_bytes(meta_path))
                        .get("key_index_cols") or ())
-    pdf = spark.createDataFrame(
-        [(int(p), json.dumps(g)) for p, g in plan],
-        "new_pid int, src string").repartition(len(plan))
-    man_rows = pdf.mapInArrow(make_compact_kernel(out_dir, ki_cols),
-                              MANIFEST_SPARK_SCHEMA).collect()
+    man_rows = spark.range(0, len(plan), 1, len(plan)).mapInArrow(
+        make_compact_kernel(out_dir, plan, ki_cols),
+        MANIFEST_SPARK_SCHEMA).collect()
     if len(man_rows) != len(plan):
         raise RuntimeError(
             f"compact_table: {len(plan)} groups planned but "

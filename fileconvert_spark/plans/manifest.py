@@ -923,13 +923,13 @@ def decode_table(spark, out_dir: str, columns: list[str] | None = None,
     readers, or treat a missing-part read error during a known
     compaction as "compaction in progress — retry".
 
-    Plan shape: each task decodes whole part files in place — NO
-    shuffle at all. This is the plan shape that survives 100 TB: the enc
-    layout is chunk-aligned by construction, so decode is embarrassingly
-    parallel. Tiny parts are packed into ~DECODE_TASK_TARGET_BYTES task
-    groups, sized from the per-part file sizes the manifest list
-    already carries. The table's _meta.json, _schema.json and manifest
-    list are each read once, on the driver.
+    Plan shape: one stage, MapInArrow over a ``spark.range`` source with
+    one task per task group, which decodes its whole part files in place
+    — NO shuffle, and no Python task that does not decode. This survives
+    100 TB: the enc layout is chunk-aligned, so decode is embarrassingly
+    parallel. Tiny parts are packed into ~DECODE_TASK_TARGET_BYTES groups
+    sized from the file sizes the manifest list carries. The table's
+    _meta.json, _schema.json and manifest list are read once, on the driver.
 
     ``columns``: decode only a projection — the engine-format equivalent
     of parquet column pruning. Non-selected columns' payload rows are
@@ -1065,17 +1065,14 @@ def decode_table(spark, out_dir: str, columns: list[str] | None = None,
                 cur, cur_b = [], 0
         if cur:
             groups.append(cur)
-    fdf = spark.createDataFrame([("\n".join(g),) for g in groups],
-                                "paths string") \
-        .repartition(max(len(groups), 1))
 
     def decode_parts(batches):
         # mapInArrow: decoded chunks go back to the JVM as Arrow batches
         # directly — no pandas materialization on the decode hot path;
-        # each incoming row is one task GROUP of newline-joined part paths
+        # each incoming range id indexes one task GROUP in ``groups``
         for b in batches:
-            for paths_val in b.column(0):
-                for path in paths_val.as_py().split("\n"):
+            for gid in b.column(0).to_pylist():
+                for path in groups[gid]:
                     yield from _decode_part(path)
 
     def _decode_part(path):
@@ -1126,7 +1123,8 @@ def decode_table(spark, out_dir: str, columns: list[str] | None = None,
         for cid in sorted(by_chunk):
             yield assemble_chunk(by_chunk[cid], column_order, pages)
 
-    out = fdf.mapInArrow(decode_parts, schema=schema)
+    out = spark.range(0, len(groups), 1, max(len(groups), 1)) \
+        .mapInArrow(decode_parts, schema=schema)
     return out.filter(predicate_column_expr(pred)) if pred else out
 
 

@@ -64,6 +64,9 @@ def test_encode_pipeline_single_shuffle(spark):
     assert n_exchanges == 1, p
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
+    # the bucket map is built from Arrow: a LocalTableScan, not an RDD
+    # of pickled rows that costs a Python task per slice
+    assert "ExistingRDD" not in p, p
 
 
 def test_narrow_decode_no_data_exchange(spark, tmp_path):
@@ -74,9 +77,54 @@ def test_narrow_decode_no_data_exchange(spark, tmp_path):
     encode_table(spark, docs, out, n_buckets=2, key_col="source",
                  salt_cols=("doc_id",), weight_col="text")
     p = plan_of(decode_table(spark, out))
-    # only the tiny path-distribution exchange is allowed
-    assert p.count(") Exchange") <= 1
+    # no Exchange at all: MapInArrow reads a JVM-side Range of task
+    # group ids, not a driver list re-pickled by Python tasks
+    assert p.count(") Exchange") == 0, p
     assert "MapInArrow" in p or "mapInArrow" in p.lower()
+    tree = p.split("\n\n")[0].splitlines()
+    assert tree[-1].lstrip("+- *").startswith("Range ("), p
+    assert "ExistingRDD" not in p, p
+
+
+def test_decode_runs_one_task_per_group(spark, tmp_path):
+    """A decode starts exactly one (Python) task per task group: no
+    extra stage re-pickles the group list. Each Python task has a fixed
+    CPU cost, so a count above the group count is pure overhead."""
+    import time
+
+    from fileconvert_spark.plans.manifest import decode_table, encode_table
+
+    docs = spark.read.parquet(os.path.join(SF, "documents.parquet"))
+    out = str(tmp_path / "enc")
+    encode_table(spark, docs, out, n_buckets=4, key_col="source",
+                 salt_cols=("doc_id",), weight_col="text")
+    n_parts = len([f for f in os.listdir(os.path.join(out, "data"))
+                   if f.endswith(".parquet")])
+    # tiny parts sit far below the parallelism floor's target, so each
+    # part is its own task group
+    assert n_parts == 4
+    n_rows = docs.count()
+    sc = spark.sparkContext
+    group = f"decode-task-count-{time.time_ns()}"
+    sc.setJobGroup(group, "decode task count")
+    try:
+        assert len(decode_table(spark, out).collect()) == n_rows
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while True:  # the status store is filled by an async listener
+        jobs = [tracker.getJobInfo(j)
+                for j in tracker.getJobIdsForGroup(group)]
+        if jobs and all(j and j.status == "SUCCEEDED" for j in jobs):
+            stages = [tracker.getStageInfo(s)
+                      for j in jobs for s in j.stageIds]
+            if all(stages):
+                break
+        assert time.time() < deadline, jobs
+        time.sleep(0.1)
+    assert sum(st.numTasks for st in stages) == n_parts, stages
+
 
 def test_lsh_band_join_carries_no_text(spark):
     """The MinHash-LSH band explode/self-join must shuffle only (id, band,

@@ -124,3 +124,31 @@ def test_entry_smoke(spark):
 ])
 def test_parse_max_partition_bytes(conf, want):
     assert entry_mod._parse_bytes(conf) == want
+
+
+def test_table_cache_evicts_least_recently_used(monkeypatch):
+    """_t's plan cache is a 256-entry LRU: the 257th key evicts only the
+    least recently used entry, and a hit refreshes recency."""
+    from collections import OrderedDict
+    from types import SimpleNamespace
+
+    reads = []
+
+    def parquet(path):
+        reads.append(path)
+        return path
+
+    fake = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app"),
+                           read=SimpleNamespace(parquet=parquet))
+    monkeypatch.setattr(entry_mod, "_T_CACHE", OrderedDict())
+    for i in range(256):
+        entry_mod._t(fake, "/sf", f"t{i}")
+    entry_mod._t(fake, "/sf", "t0")  # hit: t0 becomes most recent
+    assert len(reads) == 256
+    entry_mod._t(fake, "/sf", "t256")
+    cached = {os.path.basename(k[1]) for k in entry_mod._T_CACHE}
+    assert len(cached) == 256
+    assert "t1.parquet" not in cached  # the LRU entry, and only it
+    assert {"t0.parquet", "t2.parquet", "t256.parquet"} <= cached
+    entry_mod._t(fake, "/sf", "t0")
+    assert len(reads) == 257  # t0 survived the eviction
