@@ -23,9 +23,11 @@ tokens.
 
 from __future__ import annotations
 
+import os
 import re
 from collections import Counter
 
+from ..plans import fsio
 from .text import BPE_TOKEN_RE
 
 _PRE_RE = re.compile(BPE_TOKEN_RE)
@@ -136,3 +138,51 @@ def deserialize_merges(blob: str) -> list[tuple[str, str]]:
             a, _, b = line.partition(" ")
             out.append((a, b))
     return out
+
+
+BPE_VOCAB_FILE = "_bpe_merges.txt"
+
+
+def train_and_store_bpe(df, out_dir: str, text_col: str) -> str:
+    """Train a 128-merge BPE vocab ONCE and store it as table metadata
+    (``BPE_VOCAB_FILE`` alongside ``_meta.json``, GPT-2 merges.txt
+    format) — token counting over an encoded table then loads the stored
+    vocab instead of retraining per query.
+
+    Idempotent: an existing vocab file is kept (resume semantics — the
+    vocab is part of the table's identity like ``n_buckets``). The
+    training sample is the 200 rows with the smallest xxhash64(text)
+    (ties broken on the text itself): a TakeOrderedAndProject over a
+    single-column projection, deterministic and independent of the
+    input's partitioning/order, same device as the IVF quantizer sample.
+    Training itself is bounded driver-side work (train_bpe caps the bytes
+    it consumes); the merge table is a few KB.
+    """
+    from pyspark.sql import functions as F
+
+    path = os.path.join(out_dir, BPE_VOCAB_FILE)
+    if fsio.exists(path):
+        return path
+    fsio.makedirs(out_dir)
+    sample = [
+        r[0]
+        for r in df.select(F.col(text_col).alias("t"))
+        .where(F.col("t").isNotNull())
+        .orderBy(F.xxhash64("t"), "t")
+        .limit(200)
+        .collect()
+    ]
+    merges = train_bpe(sample, n_merges=128)
+    fsio.write_bytes_atomic(path, serialize_merges(merges).encode())
+    return path
+
+
+def load_bpe_vocab(out_dir: str) -> list[tuple[str, str]]:
+    """Load the stored merge list of an encoded table; raises
+    FileNotFoundError when no vocab was stored there."""
+    path = os.path.join(out_dir, BPE_VOCAB_FILE)
+    if not fsio.exists(path):
+        raise FileNotFoundError(
+            f"no {BPE_VOCAB_FILE} in {out_dir}; call "
+            "train_and_store_bpe(df, out_dir, text_col) first")
+    return deserialize_merges(fsio.read_bytes(path).decode())

@@ -381,15 +381,6 @@ def dec_linedict_str(payload, dict_blob, meta, n):
 # int codecs — operate on np.int64 arrays (other types adapted by wrapper)
 # --------------------------------------------------------------------------
 
-def _zigzag(v: np.ndarray) -> np.ndarray:
-    return ((v << 1) ^ (v >> 63)).astype(np.uint64)
-
-
-def _unzigzag(u: np.ndarray) -> np.ndarray:
-    u = u.astype(np.uint64)
-    return ((u >> np.uint64(1)) ^ (~(u & np.uint64(1)) + np.uint64(1))).astype(np.int64)
-
-
 def enc_raw_int(vals: np.ndarray):
     return vals.astype("<i8").tobytes(), None, {}
 

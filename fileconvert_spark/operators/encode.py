@@ -7,11 +7,13 @@ with codec auto-selection (functions/codecs.py), and emits one ``enc`` row
 per (partition, chunk, column). No RDDs, no per-row Python, no driver-side
 data movement.
 
-The decode executor is an ``applyInPandas`` grouped by (part_id, chunk_id):
-one shuffle of *compressed* bytes, then each group reconstructs its chunk's
-columns bit-identically. At 100 TB the shuffle moves only encoded payloads
-(typically 10-20x smaller than raw), and chunk groups are independent —
-parallelism = number of chunks.
+Decoding an ``encode_df`` frame (``decode_df``) is one repartition by
+(part_id, chunk_id) — a shuffle of *compressed* bytes only, typically
+10-20x smaller than raw — then a ``mapInArrow`` that reconstructs each
+chunk's columns bit-identically. An encoded table directory decodes with
+no shuffle at all: plans/manifest.py ``decode_table`` is one narrow
+``mapInArrow`` over a ``spark.range`` of part groups. Both share the chunk
+assembler ``assemble_chunk``.
 
 Capability parity: reference = renesugar/FileConvert csv2parquet/parquet2csv
 two-pass pipeline (BASELINE.json line 6; checkout empty, SURVEY.md §0) —
@@ -691,7 +693,7 @@ def encode_chunk_table(tbl: pa.Table, part_id: int, chunk_id: int,
     but a foreign table silently degrades the ratio until drift retrain).
 
     ``zone_cols``: columns that get zone-map bounds in their chunk meta
-    (None = every column, the standalone/encode_df default).
+    (None = every column, the encode_df default).
     """
     rows = {name: [] for name in ENC_ARROW_SCHEMA.names}
     for col in tbl.column_names:
@@ -871,13 +873,13 @@ def consolidate_part_dicts(fam_rows: list[dict], all_columns: list[str],
 
 
 def make_encode_fn(chunk_rows: int = DEFAULT_CHUNK_ROWS,
-                   chunk_bytes: int = DEFAULT_CHUNK_BYTES,
                    part_id_col: str | None = None,
                    cache_ns: str | None = None,
                    zone_cols: frozenset | None = None,
                    key_index_cols: frozenset | None = None,
                    key_index_acc: dict | None = None):
     """Build the mapInArrow kernel: batches in -> enc record batches out.
+    A chunk closes at ``chunk_rows`` rows or DEFAULT_CHUNK_BYTES bytes.
 
     ``part_id_col``: optional column carrying the deterministic bucket id
     (B2 partitioning); it is popped from the data and used as part_id so
@@ -940,7 +942,8 @@ def make_encode_fn(chunk_rows: int = DEFAULT_CHUNK_ROWS,
                 bufs.setdefault(pid, []).append(sub)
                 rows[pid] = rows.get(pid, 0) + sub.num_rows
                 byts[pid] = byts.get(pid, 0) + sub.nbytes
-                if rows[pid] >= chunk_rows or byts[pid] >= chunk_bytes:
+                if (rows[pid] >= chunk_rows
+                        or byts[pid] >= DEFAULT_CHUNK_BYTES):
                     yield flush(pid)
         for pid, buf in list(bufs.items()):
             if buf:
@@ -950,16 +953,13 @@ def make_encode_fn(chunk_rows: int = DEFAULT_CHUNK_ROWS,
 
 
 def encode_df(df, chunk_rows: int = DEFAULT_CHUNK_ROWS,
-              chunk_bytes: int = DEFAULT_CHUNK_BYTES,
-              part_id_col: str | None = None,
-              cache_ns: str | None = None):
+              part_id_col: str | None = None):
     """DataFrame -> enc DataFrame (one row per partition x chunk x column)."""
-    if cache_ns is None:
-        # driver-side uuid shipped in the closure: every task of THIS job
-        # shares the FSST cache namespace, other jobs never collide
-        cache_ns = uuid.uuid4().hex[:12]
+    # driver-side uuid shipped in the closure: every task of THIS job
+    # shares the FSST cache namespace, other jobs never collide
+    cache_ns = uuid.uuid4().hex[:12]
     return df.mapInArrow(
-        make_encode_fn(chunk_rows, chunk_bytes, part_id_col, cache_ns),
+        make_encode_fn(chunk_rows, part_id_col, cache_ns),
         ENC_SPARK_SCHEMA,
     )
 

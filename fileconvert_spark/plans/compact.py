@@ -73,6 +73,7 @@ from ..operators.encode import (
     _page_values,
 )
 from .manifest import (
+    MANIFEST_ARROW_SCHEMA,
     MANIFEST_SPARK_SCHEMA,
     check_format_version,
     invalidate_manifest_list,
@@ -201,13 +202,6 @@ def _merge_group(out_dir: str, new_pid: int, src_pids: list[int],
 def make_compact_kernel(out_dir: str, plan: list[tuple[int, list[int]]],
                         ki_cols: list[str] | None = None):
     """mapInArrow kernel over ``spark.range``: id i merges ``plan[i]``."""
-    man_schema = pa.schema([
-        ("part_id", pa.int32()), ("n_rows", pa.int64()),
-        ("n_chunks", pa.int32()), ("raw_bytes", pa.int64()),
-        ("enc_bytes", pa.int64()), ("file_bytes", pa.int64()),
-        ("codec_map", pa.string()), ("sha256_part", pa.string()),
-        ("wall_ms", pa.int64()), ("status", pa.string()),
-    ])
 
     def fn(batches):
         t0 = time.time()
@@ -218,7 +212,8 @@ def make_compact_kernel(out_dir: str, plan: list[tuple[int, list[int]]],
                 rows.append(_merge_group(out_dir, new_pid, src_pids, t0,
                                          ki_cols=ki_cols))
         if rows:
-            yield pa.RecordBatch.from_pylist(rows, schema=man_schema)
+            yield pa.RecordBatch.from_pylist(rows,
+                                             schema=MANIFEST_ARROW_SCHEMA)
 
     return fn
 

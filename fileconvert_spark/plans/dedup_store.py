@@ -47,7 +47,7 @@ Scale shape (the parts that matter at 100 TB):
   does not touch the content column never opens the blob store at
   all, and a selective predicate pushes the surviving refs' shas into
   the blob decode as an IN predicate that prunes blob PARTS via the
-  sha zone bounds (``blob_pushdown_limit``).
+  sha zone bounds (``BLOB_PUSHDOWN_LIMIT``).
 
 Why sha256 (not xxhash): the store maps equal hashes to one stored
 content, so the hash must be collision-free at 10^12 keys; 64-bit
@@ -64,6 +64,8 @@ from .manifest import decode_table, encode_table
 
 SHA_COL = "_fcs_content_sha"
 DEDUP_META = "_dedup_meta.json"
+# most distinct ref shas a predicate decode pushes into the blob decode
+BLOB_PUSHDOWN_LIMIT = 20_000
 
 
 def _dirs(out_dir: str) -> tuple[str, str]:
@@ -75,17 +77,16 @@ def encode_table_dedup(spark, df, out_dir: str, content_col: str = "content",
                        salt_cols: tuple[str, ...] = ("path", "commit"),
                        n_buckets: int | None = None,
                        blob_buckets: int | None = None,
-                       resume: bool = True,
                        stats_sample_fraction: float = 1.0,
-                       cluster_by: tuple[str, ...] | None = None,
-                       zone_maps: bool | tuple[str, ...] | None = None) -> dict:
+                       cluster_by: tuple[str, ...] | None = None) -> dict:
     """Encode ``df`` as a hybrid content-addressed store at ``out_dir``.
 
     ``content_col`` is the deduplicated payload column; every other
-    argument mirrors :func:`~.manifest.encode_table` and applies to the
-    ref table (``cluster_by``/``zone_maps`` drive ref-side predicate
-    pruning exactly as for a plain table). ``blob_buckets`` sizes the
-    blob table separately (default: auto from deduped bytes).
+    argument has the meaning it has in :func:`~.manifest.encode_table`
+    and applies to the ref table (``cluster_by`` drives ref-side zone
+    maps and predicate pruning exactly as for a plain table).
+    ``blob_buckets`` sizes the blob table separately (default: auto from
+    deduped bytes).
 
     Resume: both sub-tables are ordinary encoded tables, so a killed
     job resumes part-by-part in each; the dedup split itself is
@@ -131,15 +132,15 @@ def encode_table_dedup(spark, df, out_dir: str, content_col: str = "content",
              .join(dup_shas, on=SHA_COL, how="left_semi"))
 
     blob_summary = encode_table(
-        spark, blobs, blobs_dir, n_buckets=blob_buckets, resume=resume,
+        spark, blobs, blobs_dir, n_buckets=blob_buckets,
         key_col=SHA_COL, salt_cols=(SHA_COL,), weight_col=content_col,
         stats_sample_fraction=stats_sample_fraction,
         cluster_by=(SHA_COL,))
     ref_summary = encode_table(
-        spark, refs, refs_dir, n_buckets=n_buckets, resume=resume,
+        spark, refs, refs_dir, n_buckets=n_buckets,
         key_col=key_col, salt_cols=salt_cols, weight_col=content_col,
         stats_sample_fraction=stats_sample_fraction,
-        cluster_by=cluster_by, zone_maps=zone_maps)
+        cluster_by=cluster_by)
 
     # source-byte accounting (reporting only): the ref table's raw bytes
     # swap dup rows' content for a 64-char sha the source never had, so
@@ -182,8 +183,7 @@ def encode_table_dedup(spark, df, out_dir: str, content_col: str = "content",
 
 def decode_table_dedup(spark, out_dir: str,
                        columns: list[str] | None = None,
-                       predicate: tuple | list | None = None,
-                       blob_pushdown_limit: int = 20_000):
+                       predicate: tuple | list | None = None):
     """Read a content-addressed store back as the original DataFrame.
 
     ``columns``/``predicate`` behave as in
@@ -196,7 +196,7 @@ def decode_table_dedup(spark, out_dir: str,
     A projection without the content column never touches the blob
     store (the metadata-scan fast path). When content IS needed and a
     predicate is present, the surviving refs' distinct shas are
-    collected up to ``blob_pushdown_limit`` and pushed into the blob
+    collected up to ``BLOB_PUSHDOWN_LIMIT`` and pushed into the blob
     decode as an ``(sha, "in", ...)`` predicate — the blob table is
     clustered by sha, so its part manifests prune to just the parts
     holding referenced blobs. Above the limit the full blob store
@@ -239,7 +239,7 @@ def decode_table_dedup(spark, out_dir: str,
         return refs.select(*[c for c in want])
 
     blob_pred = None
-    if predicate is not None and blob_pushdown_limit > 0:
+    if predicate is not None and BLOB_PUSHDOWN_LIMIT > 0:
         # the sha collect is a separate action over the ref decode, and
         # the join below scans it again — persist so the (pruned,
         # filtered) ref rows materialize once. Without cluster_by on the
@@ -249,8 +249,8 @@ def decode_table_dedup(spark, out_dir: str,
         # exactly as for a plain table.
         refs = refs.persist()
         head = (refs.select(sha_col).where(f"{sha_col} is not null")
-                .distinct().limit(blob_pushdown_limit + 1).collect())
-        if len(head) <= blob_pushdown_limit:
+                .distinct().limit(BLOB_PUSHDOWN_LIMIT + 1).collect())
+        if len(head) <= BLOB_PUSHDOWN_LIMIT:
             blob_pred = (sha_col, "in", [r[sha_col] for r in head])
     blob_content = "_fcs_blob_" + content_col
     blobs = decode_table(spark, blobs_dir, predicate=blob_pred) \

@@ -200,7 +200,7 @@ def part_may_match(pred, out_dir: str, pid: int,
     keeps the part. Collisions only keep. ``col_types`` maps indexed
     column -> 'string' | 'int' (from the table schema). Sidecar loads
     are cached per call so an OR of k leaves on one column costs one
-    read, not k. Mirrors manifest._may_match_part."""
+    read, not k. Mirrors manifest._may_match."""
     if pred is None:
         return True
     if _cache is None:

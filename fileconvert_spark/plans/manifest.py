@@ -36,7 +36,6 @@ import pyarrow as pa
 from . import fsio
 from ..functions.codecs import DICT_FAMILY as _DICT_FAMILY
 from ..operators.encode import (
-    DEFAULT_CHUNK_BYTES,
     DEFAULT_CHUNK_ROWS,
     ENC_ARROW_SCHEMA,
     PAGE_CHUNK_ID,
@@ -44,11 +43,20 @@ from ..operators.encode import (
     make_encode_fn,
 )
 
+# one manifest summary row per written part: the Spark DDL the write and
+# compaction kernels declare, and the Arrow schema they yield
 MANIFEST_SPARK_SCHEMA = (
     "part_id int, n_rows long, n_chunks int, raw_bytes long, enc_bytes long, "
     "file_bytes long, codec_map string, sha256_part string, wall_ms long, "
     "status string"
 )
+MANIFEST_ARROW_SCHEMA = pa.schema([
+    ("part_id", pa.int32()), ("n_rows", pa.int64()),
+    ("n_chunks", pa.int32()), ("raw_bytes", pa.int64()),
+    ("enc_bytes", pa.int64()), ("file_bytes", pa.int64()),
+    ("codec_map", pa.string()), ("sha256_part", pa.string()),
+    ("wall_ms", pa.int64()), ("status", pa.string()),
+])
 
 
 MANIFEST_LIST = "_manifest_list.json"
@@ -186,7 +194,6 @@ def _merge_intervals(ivs: list[list], cap: int = 32) -> list[list]:
 
 def make_write_kernel(out_dir: str,
                       chunk_rows: int = DEFAULT_CHUNK_ROWS,
-                      chunk_bytes: int = DEFAULT_CHUNK_BYTES,
                       part_id_col: str = "bucket",
                       zone_cols: frozenset | None = None,
                       key_index_cols: frozenset | None = None):
@@ -196,21 +203,6 @@ def make_write_kernel(out_dir: str,
     point-lookup pruning on unclustered columns — written BEFORE the
     manifest so a done part always has its sidecars."""
 
-    man_schema = pa.schema(
-        [
-            ("part_id", pa.int32()),
-            ("n_rows", pa.int64()),
-            ("n_chunks", pa.int32()),
-            ("raw_bytes", pa.int64()),
-            ("enc_bytes", pa.int64()),
-            ("file_bytes", pa.int64()),
-            ("codec_map", pa.string()),
-            ("sha256_part", pa.string()),
-            ("wall_ms", pa.int64()),
-            ("status", pa.string()),
-        ]
-    )
-
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         t0 = time.time()
         # per-call accumulator: a retried task starts a fresh one, so a
@@ -218,7 +210,7 @@ def make_write_kernel(out_dir: str,
         # sidecar (extra hashes would only weaken pruning, never decode
         # wrongly — but fresh is fresh)
         ki_acc: dict | None = {} if key_index_cols else None
-        encode_fn = make_encode_fn(chunk_rows, chunk_bytes, part_id_col,
+        encode_fn = make_encode_fn(chunk_rows, part_id_col,
                                    cache_ns=out_dir, zone_cols=zone_cols,
                                    key_index_cols=key_index_cols,
                                    key_index_acc=ki_acc)
@@ -260,9 +252,8 @@ def make_write_kernel(out_dir: str,
             rows.append(write_part_file(out_dir, pid, tbl, t0))
 
         if rows:
-            arrays = [pa.array([r[f.name] for r in rows], type=f.type)
-                      for f in man_schema]
-            yield pa.RecordBatch.from_arrays(arrays, schema=man_schema)
+            yield pa.RecordBatch.from_pylist(rows,
+                                             schema=MANIFEST_ARROW_SCHEMA)
 
     return fn
 
@@ -392,15 +383,14 @@ def encode_table(spark, df, out_dir: str, n_buckets: int | None = None,
                  salt_cols: tuple[str, ...] = ("path", "commit"),
                  weight_col: str = "content",
                  chunk_rows: int = DEFAULT_CHUNK_ROWS,
-                 chunk_bytes: int = DEFAULT_CHUNK_BYTES,
-                 derived_cols: dict | None = None,
                  stats_sample_fraction: float = 1.0,
-                 bpe_text_col: str | None = None,
-                 bpe_merges: int = 128,
                  cluster_by: tuple[str, ...] | None = None,
-                 zone_maps: bool | tuple[str, ...] | None = None,
                  key_index_cols: tuple[str, ...] | None = None) -> dict:
-    """Encode a table to out_dir with manifests; returns job summary.
+    """Encode every column of ``df`` to out_dir with manifests; returns the
+    job summary. Derived columns (e.g. a ``F.length("content")`` integer
+    target for the FoR/delta codecs) are the caller's
+    ``df.withColumns({...})``; a table's BPE vocab is stored by
+    functions/bpe.py train_and_store_bpe.
 
     ``key_index_cols``: write per-part key-hash sidecar indexes
     (plans/keyindex.py) for these string/integer columns — point-lookup
@@ -420,52 +410,32 @@ def encode_table(spark, df, out_dir: str, n_buckets: int | None = None,
     full-corpus read; a few percent sample plans the same buckets. Pinned
     in _meta.json so resume re-derives byte-identical assignments.
 
-    ``derived_cols``: extra columns computed in-pipeline before encoding
-    (e.g. ``{"content_len": F.length("content")}``) — the
-    frame-of-reference / delta integer targets of SURVEY.md §2 B7; they
-    round-trip like any other column.
-
-    ``bpe_text_col``: also train-and-store a BPE vocab over this column
-    as table metadata (``_bpe_merges.txt``; see train_and_store_bpe) —
-    encode-once, so downstream token counting loads instead of retrains.
-    Resume keeps an existing vocab untouched.
-
-    ``zone_maps``: which columns carry per-chunk [min, max] zone-map
-    bounds for decode_table(predicate=...). None (default) = the
-    ``cluster_by`` columns plus ``key_col`` when clustering is on, else
-    NO columns: on unclustered data every chunk's bounds span the whole
-    range and never prune, so the bounds are pure metadata cost (~50
-    B/chunk/column — VERDICT r4 item 3 measured them at +0.6% of the
-    snappy baseline for zero pruning power). True = every column;
-    False/() = none; a tuple = exactly those columns. Decoding a table
+    Zone maps: the ``cluster_by`` columns plus ``key_col`` carry
+    per-chunk [min, max] bounds for decode_table(predicate=...) when
+    clustering is on, and no column does otherwise. Decoding a table
     without bounds on the predicate column degrades gracefully to the
-    exact catalyst filter — never wrong, just unpruned. Pinned in
-    _meta.json (table identity, like n_buckets) so resumed parts carry
-    the same stats.
+    exact catalyst filter — never wrong, just unpruned. The set is
+    pinned in _meta.json (table identity, like n_buckets) so resumed
+    parts carry the same stats.
     """
     from pyspark.sql import functions as F
 
     from ..operators.partitioning import plan_buckets, repartition_by_bucket
 
     t0 = time.time()
-    for name, col in (derived_cols or {}).items():
-        df = df.withColumn(name, col)
     fsio.makedirs(out_dir)
     # bucketing is part of the table's identity: resuming with a different
     # n_buckets (or different sampled stats) would re-bucket rows and
     # duplicate them across old/new parts
     meta_path = os.path.join(out_dir, "_meta.json")
     pinned = None
-    # resolve the zone-map column set (see docstring); () = none
-    if zone_maps is None:
-        zone_cols = (frozenset(cluster_by) | {key_col}) if cluster_by \
-            else frozenset()
-    elif zone_maps is True:
-        zone_cols = None  # every column
-    elif zone_maps is False:
-        zone_cols = frozenset()
-    else:
-        zone_cols = frozenset(zone_maps)
+    # zone-map columns follow the sort order: on unclustered data every
+    # chunk's bounds span the whole range and never prune, so they would
+    # be pure metadata cost (~50 B/chunk/column, measured at +0.6% of
+    # the snappy baseline for zero pruning power — VERDICT r4 item 3).
+    # None = every column (a table whose _meta.json says "all").
+    zone_cols: frozenset | None = (
+        frozenset(cluster_by) | {key_col} if cluster_by else frozenset())
     ki_cols = frozenset(key_index_cols or ())
     if ki_cols:
         schema_by_name = {f.name: f for f in df.schema.fields}
@@ -526,8 +496,7 @@ def encode_table(spark, df, out_dir: str, n_buckets: int | None = None,
              "n_buckets": n_buckets, "key_col": key_col,
              "salt_cols": list(salt_cols), "weight_col": weight_col,
              "stats_sample_fraction": stats_sample_fraction,
-             "zone_cols": ("all" if zone_cols is None
-                           else sorted(zone_cols)),
+             "zone_cols": sorted(zone_cols),
              "key_index_cols": sorted(ki_cols)}).encode())
     fsio.write_bytes_atomic(os.path.join(out_dir, "_schema.json"),
                             df.schema.json().encode())
@@ -541,9 +510,6 @@ def encode_table(spark, df, out_dir: str, n_buckets: int | None = None,
     # survive a crash mid-run — per-part manifests take over until the
     # new list is written at completion
     invalidate_manifest_list(out_dir)
-
-    if bpe_text_col is not None:
-        train_and_store_bpe(df, out_dir, bpe_text_col, n_merges=bpe_merges)
 
     # ``cluster_by``: opt-in within-bucket sort (no extra shuffle — a
     # per-task sort after the bucket exchange) that CLUSTERS chunk values
@@ -573,7 +539,7 @@ def encode_table(spark, df, out_dir: str, n_buckets: int | None = None,
                     .sortWithinPartitions("bucket", *cluster_by, "_fcs_tie")
                     .drop("_fcs_tie"))
     man_df = shuffled.mapInArrow(
-        make_write_kernel(out_dir, chunk_rows, chunk_bytes, "bucket",
+        make_write_kernel(out_dir, chunk_rows, "bucket",
                           zone_cols=zone_cols,
                           key_index_cols=ki_cols or None),
         MANIFEST_SPARK_SCHEMA,
@@ -614,59 +580,6 @@ def encode_table(spark, df, out_dir: str, n_buckets: int | None = None,
     return summary
 
 
-BPE_VOCAB_FILE = "_bpe_merges.txt"
-
-
-def train_and_store_bpe(df, out_dir: str, text_col: str,
-                        n_merges: int = 128, sample_docs: int = 200) -> str:
-    """Train a BPE vocab ONCE and store it as table metadata
-    (``_bpe_merges.txt`` alongside ``_meta.json``, GPT-2 merges.txt
-    format) — token counting over an encoded table then loads the stored
-    vocab instead of retraining per query.
-
-    Idempotent: an existing vocab file is kept (resume semantics — the
-    vocab is part of the table's identity like ``n_buckets``). The
-    training sample is the ``sample_docs`` rows with the smallest
-    xxhash64(text) (ties broken on the text itself): a TakeOrderedAndProject
-    over a single-column projection, deterministic and independent of the
-    input's partitioning/order, same device as the IVF quantizer sample.
-    Training itself is bounded driver-side work (train_bpe caps the bytes
-    it consumes); the merge table is a few KB.
-    """
-    from pyspark.sql import functions as F
-
-    from ..functions.bpe import serialize_merges, train_bpe
-
-    path = os.path.join(out_dir, BPE_VOCAB_FILE)
-    if fsio.exists(path):
-        return path
-    fsio.makedirs(out_dir)
-    sample = [
-        r[0]
-        for r in df.select(F.col(text_col).alias("t"))
-        .where(F.col("t").isNotNull())
-        .orderBy(F.xxhash64("t"), "t")
-        .limit(sample_docs)
-        .collect()
-    ]
-    merges = train_bpe(sample, n_merges=n_merges)
-    fsio.write_bytes_atomic(path, serialize_merges(merges).encode())
-    return path
-
-
-def load_bpe_vocab(out_dir: str) -> list[tuple[str, str]]:
-    """Load the stored merge list of an encoded table; raises
-    FileNotFoundError when the table was encoded without a vocab."""
-    from ..functions.bpe import deserialize_merges
-
-    path = os.path.join(out_dir, BPE_VOCAB_FILE)
-    if not fsio.exists(path):
-        raise FileNotFoundError(
-            f"no {BPE_VOCAB_FILE} in {out_dir}; encode with "
-            "bpe_text_col=... or call train_and_store_bpe first")
-    return deserialize_merges(fsio.read_bytes(path).decode())
-
-
 def read_all_manifests(out_dir: str) -> list[dict]:
     listed = _load_manifest_list(out_dir)
     if listed is not None:
@@ -702,10 +615,7 @@ def normalize_predicate(predicate):
     predicate must fail loudly here, not as an opaque unpack error deep
     in the decode path.
     """
-    if predicate is None:
-        return None
-    node = _norm_pred(predicate)
-    return node
+    return None if predicate is None else _norm_pred(predicate)
 
 
 def _norm_pred(p):
@@ -772,9 +682,11 @@ def predicate_column_expr(node):
         _op.and_ if node[0] == "and" else _op.or_, exprs)
 
 
-def _may_match_part(node, zones: dict) -> bool:
-    """Can any row of a part satisfy the predicate tree, judging only by
-    the part's manifest zone bounds? Missing bounds -> True (absence of
+def _may_match(node, zones: dict) -> bool:
+    """Can any row satisfy the predicate tree, judging only by ``zones``
+    (column -> list of [lo, hi] intervals)? A part's zones are its
+    manifest bounds; a chunk's are its ``zs`` bounds, or its ``zsv``
+    values as [v, v] intervals. Missing bounds -> True (absence of
     evidence never prunes). AND prunes if ANY branch is impossible; OR
     prunes only if EVERY branch is impossible — each is an upper bound
     on satisfiability, so pruning is always safe."""
@@ -785,27 +697,8 @@ def _may_match_part(node, zones: dict) -> bool:
             return True
         return any(_pred_may_match(iv, op, val) for iv in ivs)
     if node[0] == "and":
-        return all(_may_match_part(s, zones) for s in node[1])
-    return any(_may_match_part(s, zones) for s in node[1])
-
-
-def _may_match_chunk(node, stats: dict, cid: int) -> bool:
-    """Same logic at chunk granularity: ``stats[(col, cid)]`` holds the
-    chunk's meta dict with ``zs`` [min, max] bounds and optionally
-    ``zsv`` (distinct-value list — exact membership on low-cardinality
-    chunks, see operators/encode.py _zone_stats)."""
-    if node[0] == "leaf":
-        _, col, op, val = node
-        md = stats.get((col, cid))
-        if md is None:
-            return True  # no stats -> may match
-        zsv = md.get("zsv")
-        if zsv is not None:
-            return any(_pred_may_match([v, v], op, val) for v in zsv)
-        return _pred_may_match(md.get("zs"), op, val)
-    if node[0] == "and":
-        return all(_may_match_chunk(s, stats, cid) for s in node[1])
-    return any(_may_match_chunk(s, stats, cid) for s in node[1])
+        return all(_may_match(s, zones) for s in node[1])
+    return any(_may_match(s, zones) for s in node[1])
 
 
 def _pred_may_match(zs, op: str, value) -> bool:
@@ -1019,9 +912,9 @@ def decode_table(spark, out_dir: str, columns: list[str] | None = None,
         # or zones (or a missing bound for the column) are kept: absence
         # of evidence never prunes. AND: a part survives only if EVERY
         # branch may-match; OR: it survives if ANY branch may-match
-        # (union of keeps over the same bounds — see _may_match_part).
+        # (union of keeps over the same bounds — see _may_match).
         files = [p for p in files
-                 if _may_match_part(
+                 if _may_match(
                      pred, (mans.get(_part_id(p)) or {}).get("zones") or {})]
         # key-index point-lookup pruning (plans/keyindex.py): active only
         # when the table was encoded with key_index_cols AND the
@@ -1088,24 +981,31 @@ def decode_table(spark, out_dir: str, columns: list[str] | None = None,
             # excluded chunks are dropped via the chunk_id filter (skips
             # decode cost; their payload bytes are still read unless the
             # WHOLE part prunes — row groups are per-column, see the
-            # docstring). AND/OR follow _may_match_chunk: a chunk
-            # survives an AND only if every branch may-match, an OR if
-            # any branch does.
+            # docstring). AND/OR follow _may_match: a chunk survives an
+            # AND only if every branch may-match, an OR if any branch
+            # does.
             zmeta = fsio.read_parquet(
                 path, filters=[("column", "in", pcols_all)],
                 columns=["column", "chunk_id", "meta"])
-            stats: dict[tuple, dict] = {}
+            zones: dict[int, dict[str, list]] = {}
             for col, cid, mj in zip(zmeta.column("column").to_pylist(),
                                     zmeta.column("chunk_id").to_pylist(),
                                     zmeta.column("meta").to_pylist()):
-                if cid != PAGE_CHUNK_ID:  # page rows carry no zone stats
-                    stats[(col, cid)] = json.loads(mj)
-            chunk_ids = {cid for _col, cid in stats}
-            keep = [cid for cid in sorted(chunk_ids)
-                    if _may_match_chunk(pred, stats, cid)]
+                if cid == PAGE_CHUNK_ID:  # page rows carry no zone stats
+                    continue
+                # zsv (distinct values of a low-cardinality chunk, see
+                # operators/encode.py _zone_stats) prunes exactly as
+                # [v, v] intervals; a missing zs never prunes
+                md = json.loads(mj)
+                zsv = md.get("zsv")
+                zones.setdefault(cid, {})[col] = (
+                    [[v, v] for v in zsv] if zsv is not None
+                    else [md.get("zs")])
+            keep = [cid for cid in sorted(zones)
+                    if _may_match(pred, zones[cid])]
             if not keep:
                 return  # whole part pruned
-            if len(keep) < len(chunk_ids):
+            if len(keep) < len(zones):
                 # page rows (chunk_id = PAGE_CHUNK_ID) must survive any
                 # chunk pruning — dp chunks decode through them
                 part_flt = (part_flt or []) + [

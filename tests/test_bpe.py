@@ -57,21 +57,23 @@ def test_empty_and_edge_inputs():
 
 
 def test_vocab_persists_with_encoded_table(spark, tmp_path):
-    """VERDICT r3 item 2: encode_table(bpe_text_col=...) trains ONCE and
-    stores _bpe_merges.txt as table metadata; load_bpe_vocab reads it
-    back identical, resume keeps it untouched, and the sample is
-    order-independent (hash-rank, not input order)."""
+    """VERDICT r3 item 2: train_and_store_bpe next to encode_table trains
+    ONCE and stores _bpe_merges.txt as table metadata; load_bpe_vocab
+    reads it back identical, resume keeps it untouched, and the sample
+    is order-independent (hash-rank, not input order)."""
     import os
 
-    from fileconvert_spark.plans.manifest import (
-        BPE_VOCAB_FILE, encode_table, load_bpe_vocab, train_and_store_bpe,
+    from fileconvert_spark.functions.bpe import (
+        BPE_VOCAB_FILE, load_bpe_vocab, train_and_store_bpe,
     )
+    from fileconvert_spark.plans.manifest import encode_table
 
     rows = [(i, f"hug hug hug lowest lowest newest doc{i}") for i in range(60)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = str(tmp_path / "enc")
     encode_table(spark, df, out, n_buckets=2, key_col="doc_id",
-                 salt_cols=(), weight_col="text", bpe_text_col="text")
+                 salt_cols=(), weight_col="text")
+    train_and_store_bpe(df, out, "text")
     vocab_path = os.path.join(out, BPE_VOCAB_FILE)
     assert os.path.exists(vocab_path)
     merges = load_bpe_vocab(out)
@@ -80,7 +82,8 @@ def test_vocab_persists_with_encoded_table(spark, tmp_path):
     # resume: re-encoding must not retrain (file content byte-stable)
     before = open(vocab_path, "rb").read()
     encode_table(spark, df, out, key_col="doc_id", salt_cols=(),
-                 weight_col="text", bpe_text_col="text")
+                 weight_col="text")
+    train_and_store_bpe(df, out, "text")
     assert open(vocab_path, "rb").read() == before
 
     # order independence: a reshuffled input trains the same vocab
@@ -93,7 +96,7 @@ def test_vocab_persists_with_encoded_table(spark, tmp_path):
 def test_load_vocab_missing_raises(tmp_path):
     import pytest
 
-    from fileconvert_spark.plans.manifest import load_bpe_vocab
+    from fileconvert_spark.functions.bpe import load_bpe_vocab
 
     with pytest.raises(FileNotFoundError, match="_bpe_merges"):
         load_bpe_vocab(str(tmp_path))

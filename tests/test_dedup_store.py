@@ -110,14 +110,14 @@ def test_no_content_projection_skips_blob_store(spark, store):
         os.rename(hidden, blobs_dir)
 
 
-def test_predicate_decode_with_sha_pushdown(spark, store):
+def test_predicate_decode_with_sha_pushdown(spark, store, monkeypatch):
     out, src, _ = store
     pred = ("repo", "=", "org0/edge")
     dec = DS.decode_table_dedup(spark, out, predicate=pred)
     assert _rows(dec) == _rows(src.filter("repo = 'org0/edge'"))
     # the same read with pushdown disabled (full blob decode + join)
-    dec2 = DS.decode_table_dedup(spark, out, predicate=pred,
-                                 blob_pushdown_limit=0)
+    monkeypatch.setattr(DS, "BLOB_PUSHDOWN_LIMIT", 0)
+    dec2 = DS.decode_table_dedup(spark, out, predicate=pred)
     assert _rows(dec2) == _rows(dec)
 
 

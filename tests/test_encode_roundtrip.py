@@ -127,6 +127,71 @@ def test_torn_manifest_is_reencoded(spark, corpus_df, tmp_path):
     assert_roundtrip(corpus_df, dec, KEYS)
 
 
+def test_resume_keeps_all_zone_cols_of_older_table(spark, tmp_path):
+    """A table whose _meta.json pins zone_cols "all" (every column
+    carries chunk zone stats — written by earlier engine versions) keeps
+    that on resume: the re-encoded part's chunks carry ``zs`` on every
+    zone-able column, the untouched parts keep their own (none) and the
+    table still decodes exactly."""
+    import json
+
+    from fileconvert_spark.operators.encode import PAGE_CHUNK_ID
+    from fileconvert_spark.plans import fsio
+    from fileconvert_spark.plans.manifest import invalidate_manifest_list
+
+    rows = [(i, i // 100, f"s{i % 4}", i * 0.5) for i in range(2000)]
+    df = spark.createDataFrame(rows,
+                               "doc_id long, grp long, src string, x double")
+    out = str(tmp_path / "enc_all")
+    encode_table(spark, df, out, n_buckets=4, key_col="grp",
+                 salt_cols=("doc_id",), weight_col="src")
+    meta_path = os.path.join(out, "_meta.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    assert meta["zone_cols"] == []
+    meta["zone_cols"] = "all"
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    done = sorted(scan_done_parts(out))
+    victim, kept = done[0], done[1]
+    invalidate_manifest_list(out)
+    os.remove(os.path.join(out, "manifests", f"part-{victim:05d}.json"))
+
+    s2 = encode_table(spark, df, out, key_col="grp", salt_cols=("doc_id",),
+                      weight_col="src")
+    assert s2["parts_encoded_this_run"] == 1
+    with open(meta_path) as f:
+        assert json.load(f)["zone_cols"] == "all"
+
+    def chunk_metas(pid):
+        tbl = fsio.read_parquet(
+            os.path.join(out, "data", f"part-{pid:05d}.parquet"))
+        return [(r["column"], json.loads(r["meta"]))
+                for r in tbl.to_pylist() if r["chunk_id"] != PAGE_CHUNK_ID]
+
+    resumed = chunk_metas(victim)
+    assert {c for c, _ in resumed} == set(df.columns)
+    assert all("zs" in m for _, m in resumed)
+    assert not any("zs" in m for _, m in chunk_metas(kept))
+    assert sorted(decode_table(spark, out).collect()) == sorted(df.collect())
+
+
+def test_manifest_arrow_schema_matches_spark_ddl(spark):
+    """The write and compaction kernels yield MANIFEST_ARROW_SCHEMA rows
+    under the MANIFEST_SPARK_SCHEMA DDL: both must name the same fields
+    with the same types, in the same order."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from fileconvert_spark.plans.manifest import (
+        MANIFEST_ARROW_SCHEMA, MANIFEST_SPARK_SCHEMA,
+    )
+
+    ddl = spark.createDataFrame([], MANIFEST_SPARK_SCHEMA).schema
+    arrow = from_arrow_schema(MANIFEST_ARROW_SCHEMA)
+    assert [(f.name, f.dataType) for f in arrow.fields] == \
+        [(f.name, f.dataType) for f in ddl.fields]
+
+
 def test_manifest_list_fast_path_and_fallback(spark, corpus_df, tmp_path):
     """The completion-time manifest list (Iceberg pattern) answers
     scan_done_parts in one read; it vouches for parts while the data
@@ -168,12 +233,11 @@ def test_derived_int_columns_roundtrip(spark, corpus_df, tmp_path):
     with recomputation on the decoded data."""
     out = str(tmp_path / "enc_derived")
     encode_table(
-        spark, corpus_df, out, n_buckets=4,
-        derived_cols={
+        spark, corpus_df.withColumns({
             "content_len": F.coalesce(F.length("content"), F.lit(0)).cast("long"),
             "n_lines": F.size(F.split(F.coalesce(F.col("content"), F.lit("")), "\n"))
             .cast("long"),
-        },
+        }), out, n_buckets=4,
     )
     dec = decode_table(spark, out)
     assert "content_len" in dec.columns and "n_lines" in dec.columns
@@ -586,7 +650,7 @@ def test_decode_projection(spark, corpus_df, tmp_path):
 
 
 def test_bpe_token_counts_as_derived_engine_column(spark, corpus_df, tmp_path):
-    """Tokenization integrates with the engine via derived_cols: a
+    """Tokenization integrates with the engine as a derived column: a
     trained-BPE token count rides through the int codecs and decodes to
     exactly the recomputed value."""
     from fileconvert_spark.functions.bpe import train_bpe
@@ -597,9 +661,9 @@ def test_bpe_token_counts_as_derived_engine_column(spark, corpus_df, tmp_path):
     merges = train_bpe(sample, n_merges=64)
     out = str(tmp_path / "enc_bpe")
     encode_table(
-        spark, corpus_df, out, n_buckets=4,
-        derived_cols={"n_tok_bpe": token_count_bpe_learned(
-            F.coalesce(F.col("content"), F.lit("")), merges)},
+        spark, corpus_df.withColumns({"n_tok_bpe": token_count_bpe_learned(
+            F.coalesce(F.col("content"), F.lit("")), merges)}),
+        out, n_buckets=4,
     )
     dec = decode_table(spark, out)
     bad = dec.filter(
@@ -915,7 +979,7 @@ def test_predicate_conjunction_decode(spark, tmp_path):
     out = str(tmp_path / "enc_conj")
     encode_table(spark, df, out, n_buckets=8,
                  key_col="grp", salt_cols=("doc_id",), weight_col="text",
-                 cluster_by=("doc_id",), zone_maps=("doc_id", "grp", "src"))
+                 cluster_by=("doc_id",))
 
     cases = [
         [("doc_id", "<", 3000), ("grp", ">=", 1)],
@@ -989,7 +1053,7 @@ def test_predicate_in_list_decode(spark, tmp_path):
     out = str(tmp_path / "enc_in")
     encode_table(spark, df, out, n_buckets=8,
                  key_col="grp", salt_cols=("doc_id",), weight_col="text",
-                 cluster_by=("doc_id",), zone_maps=("doc_id", "grp"))
+                 cluster_by=("doc_id",))
 
     got = decode_table(spark, out, predicate=("grp", "in", [1, 5]))
     assert got.count() == df.filter(F.col("grp").isin(1, 5)).count()
@@ -1009,7 +1073,7 @@ def test_predicate_disjunction_decode(spark, tmp_path):
     filter, and part pruning keeps exactly the UNION of the branches'
     keeps (a part prunes only when every branch excludes it)."""
     from fileconvert_spark.plans.manifest import (
-        _may_match_part, decode_table, encode_table, normalize_predicate,
+        _may_match, decode_table, encode_table, normalize_predicate,
         read_all_manifests,
     )
 
@@ -1019,7 +1083,7 @@ def test_predicate_disjunction_decode(spark, tmp_path):
     out = str(tmp_path / "enc_disj")
     encode_table(spark, df, out, n_buckets=8,
                  key_col="grp", salt_cols=("doc_id",), weight_col="text",
-                 cluster_by=("doc_id",), zone_maps=("doc_id", "grp", "src"))
+                 cluster_by=("doc_id",))
 
     def want(expr):
         return df.filter(expr).count()
@@ -1057,11 +1121,11 @@ def test_predicate_disjunction_decode(spark, tmp_path):
     both = normalize_predicate(("or", [("doc_id", "<", 300),
                                        ("doc_id", ">=", 7700)]))
     keep_a = {m["part_id"] for m in mans
-              if _may_match_part(br_a, m["zones"])}
+              if _may_match(br_a, m["zones"])}
     keep_b = {m["part_id"] for m in mans
-              if _may_match_part(br_b, m["zones"])}
+              if _may_match(br_b, m["zones"])}
     keep_or = {m["part_id"] for m in mans
-               if _may_match_part(both, m["zones"])}
+               if _may_match(both, m["zones"])}
     assert keep_or == keep_a | keep_b
     # and the OR still prunes: with doc_id-clustered parts, two tight
     # ranges must not keep every part
